@@ -45,7 +45,7 @@ Query anatomy (:meth:`topk`), at any corpus size:
    constant, never a Spark job),
 2. read ONLY the ``nprobe`` probed clusters' code buckets
    (``read_keys`` bucket pruning — the 100 TB layout; rig-small
-   layouts scan-all per the shared ``_prune_probes`` rule),
+   layouts scan-all per the store's shared ``prune_probes`` rule),
 3. ADC-rank those codes against the query's m x k lookup table
    (``pq_adc_topk`` — the identical fold the in-memory path runs),
 4. fetch the shortlist's vectors from the SAME probed buckets and
@@ -78,7 +78,6 @@ from __future__ import annotations
 import json
 import math
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -94,6 +93,7 @@ from iheardai_data_pipeline_spark.operators.similarity import (
 from iheardai_data_pipeline_spark.sources.batch import eval_once
 from iheardai_data_pipeline_spark.streaming.stores import (
     MultiRelationTransactionalStore,
+    claim_layout_meta,
 )
 
 # On-disk layout version, persisted in the meta JSON (same contract as
@@ -162,8 +162,6 @@ class PersistentAnnIndex:
             },
             n_buckets=n_buckets,
         )
-        # prune-vs-scan rule — see MinHashBandIndex._prune_probes
-        self._prune_probes = self._store.n_buckets > 64
         # tombstone fast-path flag — see MinHashBandIndex (append-only
         # serving pays zero for the delete capability until one happens)
         self._flag_path = os.path.join(path, "_has_tombstones")
@@ -205,23 +203,12 @@ class PersistentAnnIndex:
                 [[float(x) for x in c] for c in book] for book in books
             ],
         }
-        meta_path = os.path.join(path, "_ann_meta.json")
-        tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        try:
-            os.link(tmp, meta_path)  # exclusive: first creator wins
-        except FileExistsError:
-            with open(meta_path) as fh:
-                existing = json.load(fh)
-            if existing != meta:
-                raise ValueError(
-                    f"ANN index at {path} already exists with different "
-                    "artifacts — refusing to append a corpus encoded "
-                    "against codebooks the index was not built with"
-                )
-        finally:
-            os.unlink(tmp)
+        if claim_layout_meta(os.path.join(path, "_ann_meta.json"), meta) != meta:
+            raise ValueError(
+                f"ANN index at {path} already exists with different "
+                "artifacts — refusing to append a corpus encoded "
+                "against codebooks the index was not built with"
+            )
         idx = cls(spark, path, id_col, vec_col, n_buckets=n_buckets)
         idx.append(corpus, epoch="__bootstrap__")
         return idx
@@ -256,7 +243,7 @@ class PersistentAnnIndex:
         only the touched buckets (the key frame is nprobe literal rows
         — the touched-bucket collect is a constant-size local job);
         scan-all layouts read every dir and let the filter prune."""
-        if self._prune_probes:
+        if self._store.prune_probes:
             keys = self.spark.createDataFrame(
                 [(int(i),) for i in probe_ids], "centroid_id int"
             )
@@ -358,7 +345,7 @@ class PersistentAnnIndex:
         key_frame = ids.select(ic)
         lookup = (
             self._store.read_keys("ids", key_frame)
-            if self._prune_probes
+            if self._store.prune_probes
             else self._store.read("ids")
         )
         if lookup is None:
@@ -604,7 +591,7 @@ class PersistentAnnIndex:
 
         # -- 3. probed codes (bounded key frame: <= n_centroids rows) -----
         probe_keys = exploded.select("centroid_id").distinct()
-        if self._prune_probes:
+        if self._store.prune_probes:
             codes = self._store.read_keys(
                 "codes", probe_keys, broadcast_keys=True
             )
@@ -646,7 +633,7 @@ class PersistentAnnIndex:
         )
 
         # -- 5. exact re-rank over the probed clusters' vectors ------------
-        if self._prune_probes:
+        if self._store.prune_probes:
             vecs = self._store.read_keys(
                 "vectors", probe_keys, broadcast_keys=True
             )

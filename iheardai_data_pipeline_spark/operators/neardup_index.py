@@ -41,9 +41,7 @@ production variant its own docs promised for the r4 incremental gate.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,6 +54,7 @@ from iheardai_data_pipeline_spark.operators.dedup import (
 from iheardai_data_pipeline_spark.sources.batch import ensure_parallelism, eval_once
 from iheardai_data_pipeline_spark.streaming.stores import (
     MultiRelationTransactionalStore,
+    claim_layout_meta,
 )
 
 # On-disk layout version, persisted in the meta JSON. Bump whenever the
@@ -146,38 +145,21 @@ class MinHashBandIndex:
             "bands": bands,
             "threshold": threshold,
         }
-        meta_path = os.path.join(path, "_lsh_meta.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                persisted = json.load(fh)
-            if persisted.get("format") != FORMAT_VERSION:
-                old = persisted.get(
-                    "format", "1 (pre-versioned, 3-column profiles)"
-                )
-                raise ValueError(
-                    f"index at {path} uses on-disk format {old}; this "
-                    f"build reads format {FORMAT_VERSION}. Opening would "
-                    "mix profile schemas in one relation and silently "
-                    "drop pre-upgrade rows from the gate — rebuild the "
-                    "index (re-append the corpus into a fresh path)."
-                )
-            if persisted != meta:
-                raise ValueError(
-                    f"index at {path} was created with {persisted}; got {meta} "
-                    "— one banding per index"
-                )
-        else:
-            tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(meta, fh)
-            try:
-                os.link(tmp, meta_path)  # exclusive: first creator wins
-            except FileExistsError:
-                with open(meta_path) as fh:
-                    if json.load(fh) != meta:
-                        raise
-            finally:
-                os.unlink(tmp)
+        persisted = claim_layout_meta(os.path.join(path, "_lsh_meta.json"), meta)
+        if persisted.get("format") != FORMAT_VERSION:
+            old = persisted.get("format", "1 (pre-versioned, 3-column profiles)")
+            raise ValueError(
+                f"index at {path} uses on-disk format {old}; this "
+                f"build reads format {FORMAT_VERSION}. Opening would "
+                "mix profile schemas in one relation and silently "
+                "drop pre-upgrade rows from the gate — rebuild the "
+                "index (re-append the corpus into a fresh path)."
+            )
+        if persisted != meta:
+            raise ValueError(
+                f"index at {path} was created with {persisted}; got {meta} "
+                "— one banding per index"
+            )
         self.n, self.k, self.bands, self.threshold = n, k, bands, threshold
         # ONE transactional store for BOTH relations: each ingest batch
         # commits its band keys and shingle profiles atomically in a
@@ -191,12 +173,6 @@ class MinHashBandIndex:
             relations={"bands": ["bkey"], "profiles": [id_col]},
             n_buckets=n_buckets,
         )
-        # prune-vs-scan rule: the touched-bucket collect is a whole
-        # Spark job over the probe keys; at rig-small bucket counts
-        # lazily listing every bucket dir (the LEFT SEMI still filters)
-        # is cheaper than running it. Large layouts (buckets_for_corpus
-        # sizing) MUST prune — that is what makes probes O(batch).
-        self._prune_probes = self._store.n_buckets > 64
         # delete/tombstone fast-path flag: until the first delete(), no
         # tombstone rows exist and the probe path skips the LWW collapse
         # entirely — the append-only hot path pays ZERO for the upsert
@@ -466,7 +442,7 @@ class MinHashBandIndex:
             # would embed its key-frame plan a second time
             stored = (
                 self._store.read_keys("bands", bands_inc.select("bkey"))
-                if self._prune_probes
+                if self._store.prune_probes
                 else self._store.read("bands")
             )
             if stored is not None:
@@ -491,7 +467,7 @@ class MinHashBandIndex:
                     .select("id_a", "id_b")
                     .distinct()
                 )
-                if self._prune_probes:
+                if self._store.prune_probes:
                     # candidate pairs are few (banding's whole point) but
                     # their plan reads store buckets + two joins — when
                     # the profile read PRUNES, its touched-bucket collect
@@ -503,7 +479,7 @@ class MinHashBandIndex:
                     self._store.read_keys(
                         "profiles", cand.select(F.col("id_b").alias(ic))
                     )
-                    if self._prune_probes
+                    if self._store.prune_probes
                     else self._store.read("profiles")
                 )
                 if idx_prof is not None and self._has_tombstones:

@@ -92,9 +92,7 @@ the persistent variant of x_text_bm25_topk.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -103,6 +101,7 @@ from iheardai_data_pipeline_spark.operators.text import normalize_text
 from iheardai_data_pipeline_spark.sources.batch import ensure_parallelism
 from iheardai_data_pipeline_spark.streaming.stores import (
     MultiRelationTransactionalStore,
+    claim_layout_meta,
 )
 
 # 2 = the round-13 layout: + forward (doc -> term list) and termstats
@@ -114,6 +113,10 @@ from iheardai_data_pipeline_spark.streaming.stores import (
 # lets the unpruned serve drop its corpus-sized doclens liveness join.
 # A format-2 index's postings lack the column — rebuild.
 FORMAT_VERSION = 3
+
+# Largest mutation delta (rows) the serve broadcasts into its liveness
+# joins: 4M rows is ~100 MB built.
+BCAST_DELTA_ROWS = 4_000_000
 
 
 class PostingsIndex:
@@ -187,45 +190,32 @@ class PostingsIndex:
             "b": b,
             "fields": self._w_milli,
         }
-        meta_path = os.path.join(path, "_bm25_meta.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                persisted = json.load(fh)
-            if persisted.get("format") != FORMAT_VERSION:
-                # a format mismatch is NOT a parameterization clash —
-                # say what it actually is (ADVICE r13): an older layout
-                # lacks the forward/termstats relations the maintained-
-                # stats serve needs, and no open-time shim can backfill
-                # them (their deltas are computed against pre-commit
-                # state at each mutation)
-                raise ValueError(
-                    f"postings index at {path} has on-disk format "
-                    f"{persisted.get('format')}; this build reads format "
-                    f"{FORMAT_VERSION} — older layouts lack columns/"
-                    "relations this serve depends on (format 1: the "
-                    "forward/termstats relations; format 2: the in-row "
-                    "postings dl) and no open-time shim can backfill "
-                    "them — the index must be REBUILT from the source "
-                    "corpus"
-                )
-            if persisted != meta:
-                raise ValueError(
-                    f"postings index at {path} was created with "
-                    f"{persisted}; got {meta} — one BM25 parameterization "
-                    "per index (scores are not comparable across k1/b)"
-                )
-        else:
-            tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(meta, fh)
-            try:
-                os.link(tmp, meta_path)  # exclusive: first creator wins
-            except FileExistsError:
-                with open(meta_path) as fh:
-                    if json.load(fh) != meta:
-                        raise
-            finally:
-                os.unlink(tmp)
+        persisted = claim_layout_meta(
+            os.path.join(path, "_bm25_meta.json"), meta
+        )
+        if persisted.get("format") != FORMAT_VERSION:
+            # a format mismatch is NOT a parameterization clash — say
+            # what it actually is (ADVICE r13): an older layout lacks
+            # the forward/termstats relations the maintained-stats serve
+            # needs, and no open-time shim can backfill them (their
+            # deltas are computed against pre-commit state at each
+            # mutation)
+            raise ValueError(
+                f"postings index at {path} has on-disk format "
+                f"{persisted.get('format')}; this build reads format "
+                f"{FORMAT_VERSION} — older layouts lack columns/"
+                "relations this serve depends on (format 1: the "
+                "forward/termstats relations; format 2: the in-row "
+                "postings dl) and no open-time shim can backfill "
+                "them — the index must be REBUILT from the source "
+                "corpus"
+            )
+        if persisted != meta:
+            raise ValueError(
+                f"postings index at {path} was created with "
+                f"{persisted}; got {meta} — one BM25 parameterization "
+                "per index (scores are not comparable across k1/b)"
+            )
         self.k1, self.b = k1, b
         self._store = MultiRelationTransactionalStore(
             spark,
@@ -239,8 +229,6 @@ class PostingsIndex:
             },
             n_buckets=n_buckets,
         )
-        # prune-vs-scan rule — see MinHashBandIndex._prune_probes
-        self._prune_probes = self._store.n_buckets > 64
 
     # -- internals ------------------------------------------------------------
 
@@ -380,7 +368,7 @@ class PostingsIndex:
         key_frame = ids.select(self.id_col)
         rows = (
             self._store.read_keys("doclens", key_frame, version=version)
-            if self._prune_probes
+            if self._store.prune_probes
             else self._store.read("doclens", version=version)
         )
         if rows is None:
@@ -426,7 +414,7 @@ class PostingsIndex:
         key_frame = ids.select(ic).distinct()
         rows = (
             self._store.read_keys("forward", key_frame, version=version)
-            if self._prune_probes
+            if self._store.prune_probes
             else self._store.read("forward", version=version)
         )
         if rows is None:
@@ -475,7 +463,7 @@ class PostingsIndex:
             self._store.read_keys(
                 "termstats", td, broadcast_keys=True, version=version
             )
-            if self._prune_probes
+            if self._store.prune_probes
             else self._store.read("termstats", version=version)
         )
         if rows is None:
@@ -539,7 +527,7 @@ class PostingsIndex:
             self._store.read_keys(
                 "postings", td, broadcast_keys=True, version=version
             )
-            if self._prune_probes
+            if self._store.prune_probes
             else self._store.read("postings", version=version)
         )
         if pl is None:
@@ -961,12 +949,10 @@ class PostingsIndex:
         without the hint the checkpointed frame's unknown size stats
         make the initial plan a sort-merge join, and even AQE's runtime
         conversion has already paid the delta's exchange). Bounded by
-        SPARK_GRAFT_BCAST_DELTA_ROWS (default 4M rows ≈ ~100 MB built);
-        a larger backlog falls back to the optimizer's choice — the
-        scale-safe posture, env-tunable per deployment."""
+        BCAST_DELTA_ROWS; a larger backlog falls back to the optimizer's
+        choice — the scale-safe posture."""
         n = getattr(m, "_graft_rows", None)
-        cap = int(os.environ.get("SPARK_GRAFT_BCAST_DELTA_ROWS", "4000000"))
-        return F.broadcast(m) if n is not None and n <= cap else m
+        return F.broadcast(m) if n is not None and n <= BCAST_DELTA_ROWS else m
 
     @staticmethod
     def _delta_alive() -> F.Column:
@@ -999,7 +985,7 @@ class PostingsIndex:
             self._store.read_keys(
                 "postings", td, broadcast_keys=True, version=version
             )
-            if self._prune_probes
+            if self._store.prune_probes
             else self._store.read("postings", version=version)
         )
         if pl is None:
@@ -1295,7 +1281,7 @@ class PostingsIndex:
             )
             if allowed_ids is not None:
                 cand = cand.join(allowed_ids, ic, "left_semi")
-            if self._prune_probes or diag is not None:
+            if self._store.prune_probes or diag is not None:
                 # the bucket-pruned forward lookup collects over cdocs
                 # (and diag counts cand) — pin once; in the scan-all
                 # regime cand stays lazy inside the scoring job (its
@@ -1313,7 +1299,7 @@ class PostingsIndex:
             # (no doclens read), and dl is the in-row sum of the
             # forward term list (== the doclens dl by construction:
             # both are SUM(tf) over the same per-batch tf relation)
-            if self._prune_probes:
+            if self._store.prune_probes:
                 # read_keys semi-joins the candidate ids itself
                 fraw = self._store.read_keys(
                     "forward", cdocs, version=version
@@ -1710,7 +1696,7 @@ class PostingsIndex:
             shard_ids = other_doclens.select(self.id_col).distinct()
             mine = (
                 self._store.read_keys("doclens", shard_ids)
-                if self._prune_probes
+                if self._store.prune_probes
                 else self._store.read("doclens")
             )
             sample = (

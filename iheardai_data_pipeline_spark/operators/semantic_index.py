@@ -41,7 +41,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +54,7 @@ from iheardai_data_pipeline_spark.operators.similarity import (
 from iheardai_data_pipeline_spark.sources.batch import ensure_parallelism
 from iheardai_data_pipeline_spark.streaming.stores import (
     MultiRelationTransactionalStore,
+    claim_layout_meta,
 )
 
 # On-disk layout version, persisted in the meta JSON (same contract as
@@ -124,8 +124,6 @@ class SemanticDedupIndex:
             relations={"vectors": ["centroid_id"], "ids": [id_col]},
             n_buckets=n_buckets,
         )
-        # prune-vs-scan rule — see MinHashBandIndex._prune_probes
-        self._prune_probes = self._store.n_buckets > 64
         # tombstone fast-path flag — see MinHashBandIndex (append-only
         # ingest pays zero for the upsert capability until a delete)
         self._flag_path = os.path.join(path, "_has_tombstones")
@@ -175,16 +173,9 @@ class SemanticDedupIndex:
             "threshold": threshold,
             "centroids": [v for _, v in cent],
         }
-        meta_path = os.path.join(path, "_centroids.json")
-        tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        try:
-            os.link(tmp, meta_path)  # exclusive: first creator wins
-        except FileExistsError:
-            pass
-        finally:
-            os.unlink(tmp)
+        # a lost race keeps the winner's centroids; the open below
+        # checks the format and threshold
+        claim_layout_meta(os.path.join(path, "_centroids.json"), meta)
         idx = cls(
             spark, path, threshold, id_col, vec_col, n_buckets=n_buckets
         )
@@ -287,7 +278,7 @@ class SemanticDedupIndex:
         key_frame = ids.select(ic)
         lookup = (
             self._store.read_keys("ids", key_frame)
-            if self._prune_probes
+            if self._store.prune_probes
             else self._store.read("ids")
         )
         if lookup is None:
@@ -404,7 +395,7 @@ class SemanticDedupIndex:
                 assigned.select("centroid_id"),
                 broadcast_keys=True,
             )
-            if self._prune_probes
+            if self._store.prune_probes
             else self._store.read("vectors")
         )
         if stored is not None and self._has_tombstones:

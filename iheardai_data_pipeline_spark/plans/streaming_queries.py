@@ -617,15 +617,16 @@ def t14_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
     from iheardai_data_pipeline_spark.streaming.stores import (
-        TransactionalParquetStore,
+        BucketedTransactionalStore,
     )
 
     t14_root = tempfile.mkdtemp(prefix="t14_")
-    store = TransactionalParquetStore(
+    store = BucketedTransactionalStore(
         spark,
         os.path.join(t14_root, "hll"),
         key_cols=["bucket"],
         order_cols=["max_rank"],
+        n_buckets=1,
     )
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
@@ -633,16 +634,16 @@ def t14_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch.where(F.col("user_id").isNotNull()), "user_id", p=6
         )
 
-        def fn(current: DataFrame | None) -> DataFrame:
+        def fn(current: DataFrame | None, upd: DataFrame) -> DataFrame:
             if current is None:
-                return regs
+                return upd
             return (
-                current.unionByName(regs)
+                current.unionByName(upd)
                 .groupBy("bucket")
                 .agg(F.max("max_rank").alias("max_rank"))
             )
 
-        store.apply(fn)
+        store.apply_keyed(regs, fn)
 
     stream = read_events_stream(spark, sf_dir)
     ckpt = harness_checkpoint_dir("t14_ckpt_")
@@ -720,8 +721,8 @@ ORDER BY e.est DESC, k.user_id LIMIT 20
     "cells and every estimate equal the one-shot batch sketch exactly. "
     "Unlike t14's max-merge (naturally idempotent), sum double-counts "
     "a crash-replayed batch, so each commit records its epoch in the "
-    "OCC commit marker (TransactionalParquetStore.apply's epoch guard) "
-    "and already-merged epochs are skipped — "
+    "OCC commit marker (BucketedTransactionalStore.apply_keyed's epoch "
+    "guard) and already-merged epochs are skipped — "
     "exactly-once even though the store commits independently of the "
     "stream checkpoint. The frequency twin of t14's sketch.",
 )
@@ -733,32 +734,33 @@ def t15_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iheardai_data_pipeline_spark.sources.batch import load_table
     from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
     from iheardai_data_pipeline_spark.streaming.stores import (
-        TransactionalParquetStore,
+        BucketedTransactionalStore,
     )
 
     t15_root = tempfile.mkdtemp(prefix="t15_")
-    store = TransactionalParquetStore(
+    store = BucketedTransactionalStore(
         spark,
         os.path.join(t15_root, "cms"),
         key_cols=["depth", "cell"],
         order_cols=["cnt"],
+        n_buckets=1,
     )
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         part = cms_build(batch, "user_id", depth=4, width=64)
 
-        def fn(current: DataFrame | None) -> DataFrame:
+        def fn(current: DataFrame | None, upd: DataFrame) -> DataFrame:
             if current is None:
-                return part
+                return upd
             return (
-                current.unionByName(part)
+                current.unionByName(upd)
                 .groupBy("depth", "cell")
                 .agg(F.sum("cnt").alias("cnt"))
             )
 
         # sum is NOT an idempotent merge: the epoch marker makes a
         # replayed micro-batch a no-op instead of a double count
-        store.apply(fn, epoch=int(batch_id))
+        store.apply_keyed(part, fn, epoch=int(batch_id))
 
     stream = read_events_stream(spark, sf_dir)
     ckpt = harness_checkpoint_dir("t15_ckpt_")
@@ -850,15 +852,16 @@ def t16_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
     from iheardai_data_pipeline_spark.streaming.stores import (
-        TransactionalParquetStore,
+        BucketedTransactionalStore,
     )
 
     t16_root = tempfile.mkdtemp(prefix="t16_")
-    store = TransactionalParquetStore(
+    store = BucketedTransactionalStore(
         spark,
         os.path.join(t16_root, "bloom"),
         key_cols=["word_idx"],
         order_cols=["word"],
+        n_buckets=1,
     )
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
@@ -870,16 +873,16 @@ def t16_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             m=4096,
         )
 
-        def fn(current: DataFrame | None) -> DataFrame:
+        def fn(current: DataFrame | None, upd: DataFrame) -> DataFrame:
             if current is None:
-                return part
+                return upd
             return (
-                current.unionByName(part)
+                current.unionByName(upd)
                 .groupBy("word_idx")
                 .agg(F.expr("bit_or(word)").alias("word"))
             )
 
-        store.apply(fn)
+        store.apply_keyed(part, fn)
 
     stream = read_events_stream(spark, sf_dir)
     ckpt = harness_checkpoint_dir("t16_ckpt_")
@@ -937,30 +940,31 @@ def t17_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
     from iheardai_data_pipeline_spark.streaming.stores import (
-        TransactionalParquetStore,
+        BucketedTransactionalStore,
     )
 
     t17_root = tempfile.mkdtemp(prefix="t17_")
-    store = TransactionalParquetStore(
+    store = BucketedTransactionalStore(
         spark,
         os.path.join(t17_root, "ddq"),
         key_cols=["e", "m"],
         order_cols=["cnt"],
+        n_buckets=1,
     )
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         part = ddq_build(batch, "value")
 
-        def fn(current: DataFrame | None) -> DataFrame:
+        def fn(current: DataFrame | None, upd: DataFrame) -> DataFrame:
             if current is None:
-                return part
+                return upd
             return (
-                current.unionByName(part)
+                current.unionByName(upd)
                 .groupBy("e", "m")
                 .agg(F.sum("cnt").alias("cnt"))
             )
 
-        store.apply(fn, epoch=int(batch_id))
+        store.apply_keyed(part, fn, epoch=int(batch_id))
 
     stream = read_events_stream(spark, sf_dir)
     ckpt = harness_checkpoint_dir("t17_ckpt_")
@@ -1135,27 +1139,28 @@ def t19_stream_pca_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iheardai_data_pipeline_spark.sources.batch import load_table
     from iheardai_data_pipeline_spark.streaming.sinks import harness_checkpoint_dir
     from iheardai_data_pipeline_spark.streaming.stores import (
-        TransactionalParquetStore,
+        BucketedTransactionalStore,
     )
 
     emb_schema = load_table(spark, sf_dir, "embeddings").schema
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     root = tempfile.mkdtemp(prefix="t19_", dir=shm)
-    store = TransactionalParquetStore(
+    store = BucketedTransactionalStore(
         spark,
         os.path.join(root, "mom"),
         key_cols=["i", "j"],
         order_cols=["sxy"],
+        n_buckets=1,
     )
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         part = comoment_sums(batch, dim=64, scale=PCA_SCALE)
 
-        def fn(current: DataFrame | None) -> DataFrame:
+        def fn(current: DataFrame | None, upd: DataFrame) -> DataFrame:
             if current is None:
-                return part
+                return upd
             return (
-                current.unionByName(part)
+                current.unionByName(upd)
                 .groupBy("i", "j")
                 .agg(
                     F.sum("sxy").alias("sxy"),
@@ -1165,7 +1170,7 @@ def t19_stream_pca_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
 
-        store.apply(fn, epoch=int(batch_id))
+        store.apply_keyed(part, fn, epoch=int(batch_id))
 
     stream = (
         spark.readStream.schema(emb_schema)

@@ -5,8 +5,11 @@ refreshes the touched-session aggregate, and updates Redis session state
 (enhanced_kpi_consumer.py:137-250). The Spark restatement is one
 ``foreachBatch`` that (a) merges facts, (b) recomputes the per-session
 aggregate for the batch's touched keys, (c) maintains a session-state
-table with a seq guard. Here the stores are parquet snapshots (Delta
-MERGE in production — the functions isolate that choice).
+table with a seq guard. The store is the transactional bucketed store
+(:class:`streaming.stores.BucketedTransactionalStore`): every fold is a
+key-local OCC read-modify-write through ``apply_keyed``, so a writer
+that loses a commit race re-reads and re-merges instead of clobbering
+the winner, and only the touched buckets are rewritten.
 """
 
 from __future__ import annotations
@@ -17,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from iheardai_data_pipeline_spark.operators.mutations import merge_upsert
+from iheardai_data_pipeline_spark.operators.mutations import last_write_wins
+from iheardai_data_pipeline_spark.streaming.stores import BucketedTransactionalStore
 
 
 def harness_checkpoint_dir(prefix: str = "ckpt_") -> str:
@@ -62,44 +66,8 @@ def archive_sink(
     return writer.start()
 
 
-class ParquetUpsertStore:
-    """Keyed parquet snapshot store with last-writer-wins merge — the
-    single-writer test-rig stand-in for a Delta table / Postgres upsert
-    target. For concurrent-writer safety or real MERGE, use the
-    drop-in backends in :mod:`streaming.stores`
-    (``TransactionalParquetStore`` / ``DeltaMergeStore``) — same
-    ``read``/``merge``/``write_snapshot`` interface."""
-
-    def __init__(self, spark: SparkSession, path: str, key_cols: list[str], order_cols: list[str]):
-        self.spark = spark
-        self.path = path
-        self.key_cols = key_cols
-        self.order_cols = order_cols
-
-    def read(self) -> DataFrame | None:
-        if not os.path.exists(self.path):
-            return None
-        return self.spark.read.parquet(self.path)
-
-    def merge(self, updates: DataFrame) -> None:
-        current = self.read()
-        if current is None:
-            merged = updates
-        else:
-            merged = merge_upsert(current, updates, self.key_cols, self.order_cols)
-        self.write_snapshot(merged)
-
-    def write_snapshot(self, df: DataFrame) -> None:
-        # write-then-swap so a crash never leaves a half-written snapshot
-        # (the input may read from self.path, so materialize to tmp first)
-        tmp = self.path + ".tmp"
-        df.write.mode("overwrite").parquet(tmp)
-        final = self.spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(self.path)
-
-
 def session_kpis_foreach_batch(
-    store: ParquetUpsertStore,
+    store: BucketedTransactionalStore,
     user_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
@@ -134,24 +102,15 @@ def session_kpis_foreach_batch(
             F.min(F.unix_seconds(F.col(ts_col))).alias("started_at_s"),
             F.max(F.unix_seconds(F.col(ts_col))).alias("ended_at_s"),
         )
-        # concurrent-writer-safe stores expose an OCC read-modify-write:
-        # `apply_keyed` (bucketed — the per-user fold is key-local, so
-        # only touched buckets rewrite) or `apply` (full snapshot).
-        # Either way a lost commit race re-reads and re-merges instead
-        # of clobbering the winner. The plain single-writer store keeps
-        # the read+replace path.
-        if hasattr(store, "apply_keyed"):
-            # the per-user fold is key-local, so partial rewrites apply
-            store.apply_keyed(partial, merge_fn)
-        elif hasattr(store, "apply"):
-            store.apply(lambda current: merge_fn(current, partial))
-        else:
-            store.write_snapshot(merge_fn(store.read(), partial))
+        # the per-user fold is key-local, so only touched buckets rewrite
+        store.apply_keyed(partial, merge_fn)
 
     return apply
 
 
-def session_state_foreach_batch(store: ParquetUpsertStore, seq_col: str = "seq"):
+def session_state_foreach_batch(
+    store: BucketedTransactionalStore, seq_col: str = "seq"
+):
     """J4/K5/W3: per-key mutable session state with a monotonic seq guard
     (reference Redis HSET + seq compare, enhanced_kpi_consumer.py:638-673).
 
@@ -160,27 +119,18 @@ def session_state_foreach_batch(store: ParquetUpsertStore, seq_col: str = "seq")
     like the reference's `seq <= current` check.
     """
 
+    def merge_fn(current: DataFrame | None, newest: DataFrame) -> DataFrame:
+        if current is None:
+            return newest
+        return last_write_wins(
+            current.unionByName(newest), store.key_cols, [seq_col]
+        )
+
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        from iheardai_data_pipeline_spark.operators.mutations import last_write_wins
-
-        newest = last_write_wins(batch_df, store.key_cols, [seq_col])
-
-        def merge_fn(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return newest
-            return last_write_wins(
-                current.unionByName(newest), store.key_cols, [seq_col]
-            )
-
-        # OCC stores re-read + re-merge on a lost commit race (see
-        # session_kpis_foreach_batch); the seq-guard LWW is key-local,
-        # so the bucketed store's partial rewrite applies too
-        if hasattr(store, "apply_keyed"):
-            store.apply_keyed(newest, lambda current, upd: merge_fn(current))
-        elif hasattr(store, "apply"):
-            store.apply(merge_fn)
-        else:
-            store.write_snapshot(merge_fn(store.read()))
+        # the seq-guard LWW is key-local, so only touched buckets rewrite
+        store.apply_keyed(
+            last_write_wins(batch_df, store.key_cols, [seq_col]), merge_fn
+        )
 
     return apply
 

@@ -1,37 +1,29 @@
-"""Pluggable keyed upsert stores for foreachBatch sinks (§3.2, K2/K4/M1-M4).
+"""The transactional keyed store behind foreachBatch sinks and the
+persistent indexes (§3.2, K2/K4/M1-M4).
 
 The reference's upserts are transactional (``ON CONFLICT ... DO UPDATE``
 inside a connection transaction, enhanced_kpi_consumer.py:395-434). The
-rig's original ``ParquetUpsertStore`` (sinks.py) is rewrite-on-merge
-WITHOUT concurrent-writer safety — fine for a single-writer test rig,
-wrong for production. This module closes that gap with two backends
-behind one interface (``read`` / ``merge`` / ``write_snapshot``), plus a
-partial-rewrite variant (:class:`BucketedTransactionalStore`) that
-removes the full-snapshot scale limitation:
+Spark restatement is ONE store implementation on plain parquet:
 
-- :class:`TransactionalParquetStore` — optimistic concurrency control on
-  a plain filesystem: every commit stages a complete snapshot under a
-  unique directory, then atomically claims the next version number with
-  an exclusive hard link (``os.link`` fails with EEXIST if the version
-  is taken — the same claim primitive Delta's log protocol relies on for
-  its ``_delta_log/N.json`` files). A losing writer re-reads the new
-  base, re-merges, and retries; readers only ever see fully-committed
-  versions, so reads are snapshot-isolated and a crash mid-write leaves
-  at most an unreferenced staging dir (cleaned by :meth:`vacuum`).
+- :class:`MultiRelationTransactionalStore` — N named relations under one
+  optimistic-concurrency commit log. The key space of every relation is
+  hash-bucketed; a commit stages ONLY the buckets it touches under a
+  unique snapshot dir, then atomically claims the next version number
+  with an exclusive hard link (``os.link`` fails with EEXIST if the
+  version is taken — the same claim primitive Delta's log protocol
+  relies on for its ``_delta_log/N.json`` files). The commit marker is a
+  MANIFEST mapping each bucket to its snapshot dirs, so untouched
+  buckets are inherited by pointer, never copied (Delta's file-level
+  MERGE). A losing writer re-reads the new base, re-applies its fold,
+  and retries; readers only ever see fully-committed versions, so reads
+  are snapshot-isolated and a crash mid-write leaves at most an
+  unreferenced staging dir (cleaned by ``vacuum``).
 
-- :class:`DeltaMergeStore` — a real Delta Lake ``MERGE INTO`` when the
-  ``delta-spark`` package is installed (it is not in this rig's
-  container, so the class import-gates and its test skips; the MERGE
-  condition reproduces the same last-writer-wins ordering the parquet
-  stores implement).
-
-At 100 TB a full-snapshot rewrite per merge is the scale limitation;
-:class:`BucketedTransactionalStore` closes it on plain parquet by
-hash-bucketing the key space and rewriting ONLY the buckets a merge
-touches (the commit manifest inherits untouched buckets by pointer —
-the same idea as Delta's file-level MERGE). The interface isolates the
-backend choice from the foreachBatch logic, which is identical across
-all of them.
+- :class:`BucketedTransactionalStore` — the single-relation facade the
+  streaming sinks and the warehouse loader use: a one-relation store
+  plus last-writer-wins ``merge`` / ``write_snapshot``. ``n_buckets=1``
+  gives the whole-table shape (one file per commit) for small folded
+  state such as the streaming sketches.
 """
 
 from __future__ import annotations
@@ -40,26 +32,17 @@ import json
 import os
 import shutil
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from iheardai_data_pipeline_spark.operators.mutations import (
     last_write_wins,
     merge_upsert,
 )
 
-try:  # pragma: no cover - exercised only where delta-spark is installed
-    from delta.tables import DeltaTable  # type: ignore
-
-    HAS_DELTA = True
-except ImportError:
-    DeltaTable = None
-    HAS_DELTA = False
-
-
-# -- shared OCC commit-log primitives ----------------------------------------------
-# One implementation of the claim protocol for both parquet stores: any
-# future fix (new OSError case, durability tweak) lands once.
+# -- OCC commit-log primitives -----------------------------------------------------
 
 
 def _occ_current_version(commits_dir: str) -> int:
@@ -108,13 +91,8 @@ def _staged_write_tasks(spark, n_groups: int) -> int:
     non-CPU executor time at batch sizes where the whole write is
     <3 MB — guide §2.2/§6 scale-adaptive partitioning). On a real
     cluster defaultParallelism >= n_groups and the count is identical
-    to the old one-task-per-group shape. Override with
-    SPARK_GRAFT_WRITE_TASKS for deployments where the write tasks
-    should not track scheduler parallelism."""
-    cap = int(os.environ.get("SPARK_GRAFT_WRITE_TASKS", "0"))
-    if cap <= 0:
-        cap = spark.sparkContext.defaultParallelism
-    return max(1, min(n_groups, cap))
+    to the one-task-per-group shape."""
+    return max(1, min(n_groups, spark.sparkContext.defaultParallelism))
 
 
 # Retired-epoch records are IMMUTABLE once published (write→fsync→
@@ -191,17 +169,17 @@ def _read_epoch_record(path: str) -> list:
 
 
 def _occ_committed_epochs(commits_dir: str) -> set:
-    """Epochs recorded by already-committed versions (see ``apply``'s
-    ``epoch`` param) PLUS epochs retired into ``_epochs/`` by vacuum —
-    so the idempotence window is the store's whole history, not just
-    the marker-retention window (a replay of an epoch older than
-    ``vacuum(keep=...)`` must still no-op, or t15/t17/t19's sum-folds
-    would double-count). Cost per call: one tiny JSON read per RETAINED
-    version (bounded by ``vacuum(keep=...)``) + a listdir of the
-    retired sidecar; retired records are immutable so each is read at
-    most once per process (``_RETIRED_EPOCH_CACHE``), and vacuum folds
-    each pruning pass's epochs into ONE record, so the sidecar grows
-    with vacuum invocations, not epochs."""
+    """Epochs recorded by already-committed versions (see
+    ``apply_keyed``'s ``epoch`` param) PLUS epochs retired into
+    ``_epochs/`` by vacuum — so the idempotence window is the store's
+    whole history, not just the marker-retention window (a replay of an
+    epoch older than ``vacuum(keep=...)`` must still no-op, or
+    t15/t17/t19's sum-folds would double-count). Cost per call: one tiny
+    JSON read per RETAINED version (bounded by ``vacuum(keep=...)``) + a
+    listdir of the retired sidecar; retired records are immutable so
+    each is read at most once per process (``_RETIRED_EPOCH_CACHE``),
+    and vacuum folds each pruning pass's epochs into ONE record, so the
+    sidecar grows with vacuum invocations, not epochs."""
     out: set = set()
     for f in os.listdir(commits_dir):
         if not f.isdigit():
@@ -318,6 +296,29 @@ def _occ_try_claim(commits_dir: str, version: int, payload: dict) -> bool:
         os.unlink(tmp)
 
 
+def claim_layout_meta(meta_path: str, meta: dict) -> dict:
+    """Pin a layout-defining JSON file: publish ``meta`` at
+    ``meta_path`` unless one is already there (write tmp, exclusive
+    ``os.link``, first creator wins) and return the PERSISTED meta —
+    ``meta`` itself when this call created the file, the winner's
+    otherwise. Every store and index pins its layout constants this
+    way; the caller decides what a mismatch means (error, inherit)."""
+    if os.path.exists(meta_path):
+        with open(meta_path) as fh:
+            return json.load(fh)
+    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as fh:
+        json.dump(meta, fh)
+    try:
+        os.link(tmp, meta_path)
+        return meta
+    except FileExistsError:
+        with open(meta_path) as fh:
+            return json.load(fh)
+    finally:
+        os.unlink(tmp)
+
+
 class StoreVersionConflict(RuntimeError):
     """A writer that pinned ``require_version`` found the store moved
     past it before its attempt could commit. The caller owns the
@@ -327,608 +328,20 @@ class StoreVersionConflict(RuntimeError):
     the snapshot-derived state at the new version, then try again."""
 
 
-class TransactionalParquetStore:
-    """Keyed upsert store with optimistic-concurrency commits on parquet.
-
-    Layout under ``path``::
-
-        _snapshots/<uuid>/   complete parquet snapshot per committed (or
-                             in-flight) version
-        _commits/<N>         content = the snapshot dir name for version N;
-                             created atomically via exclusive hard link
-
-    ``merge`` semantics match :func:`operators.mutations.merge_upsert`
-    last-writer-wins on ``order_cols`` per ``key_cols`` — the reference's
-    ``ON CONFLICT DO UPDATE WHERE excluded.seq > current.seq`` shape.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        key_cols: list[str],
-        order_cols: list[str],
-        max_retries: int = 10,
-    ):
-        self.spark = spark
-        self.path = path
-        self.key_cols = key_cols
-        self.order_cols = order_cols
-        self.max_retries = max_retries
-        os.makedirs(os.path.join(path, "_snapshots"), exist_ok=True)
-        os.makedirs(os.path.join(path, "_commits"), exist_ok=True)
-
-    # -- commit-log primitives ------------------------------------------------
-
-    def _commits_dir(self) -> str:
-        return os.path.join(self.path, "_commits")
-
-    def current_version(self) -> int:
-        """Highest committed version, or 0 if the store is empty."""
-        return _occ_current_version(self._commits_dir())
-
-    def _snapshot_dir(self, version: int) -> str | None:
-        marker = os.path.join(self._commits_dir(), str(version))
-        if not os.path.exists(marker):
-            return None
-        with open(marker) as fh:
-            name = json.load(fh)["snapshot"]
-        return os.path.join(self.path, "_snapshots", name)
-
-    def _try_commit(
-        self, version: int, snapshot_name: str, epoch=None
-    ) -> bool:
-        payload: dict = {"snapshot": snapshot_name}
-        if epoch is not None:
-            payload["epoch"] = epoch
-        return _occ_try_claim(self._commits_dir(), version, payload)
-
-    def _stage_snapshot(self, df: DataFrame) -> str:
-        name = uuid.uuid4().hex
-        df.write.mode("overwrite").parquet(os.path.join(self.path, "_snapshots", name))
-        return name
-
-    # -- store interface ------------------------------------------------------
-
-    def read(self) -> DataFrame | None:
-        """Latest committed snapshot (snapshot-isolated), or None if empty."""
-        return self.read_version(self.current_version())
-
-    def read_version(self, version: int) -> DataFrame | None:
-        """Time travel: any still-vacuum-retained committed version."""
-        if version <= 0:
-            return None
-        d = self._snapshot_dir(version)
-        return None if d is None else self.spark.read.parquet(d)
-
-    def apply(self, fn, epoch=None) -> None:
-        """OCC read-modify-write: ``fn(current_df_or_None) -> merged_df``.
-
-        The ONLY safe way to compose a merge from the latest state: the
-        loop re-reads the newest committed snapshot and RE-APPLIES ``fn``
-        on every retry, so a writer that loses a commit race folds the
-        winner's changes into its next attempt instead of clobbering
-        them. (A bare read → compute → :meth:`write_snapshot` sequence
-        would retry with its stale result and silently lose the
-        concurrent update.)
-
-        ``epoch`` makes the commit IDEMPOTENT per epoch (Delta's txn
-        appId/version idea): the epoch is recorded in the commit marker,
-        and an apply whose epoch some committed version already carries
-        is a no-op — so a non-idempotent fold (e.g. a CMS sum-merge)
-        replayed by an at-least-once foreachBatch can pass its batch_id
-        and never double-counts. The check re-runs inside the retry
-        loop, so a lost race against a same-epoch twin resolves to
-        exactly one merge.
-        """
-        for _ in range(self.max_retries):
-            if epoch is not None and epoch in _occ_committed_epochs(
-                self._commits_dir()
-            ):
-                return
-            base_version = self.current_version()
-            merged = fn(self.read_version(base_version))
-            name = self._stage_snapshot(merged)
-            if self._try_commit(base_version + 1, name, epoch=epoch):
-                return
-            # lost the race: another writer committed base_version+1 first;
-            # drop our stale staging dir, re-read, re-apply
-            shutil.rmtree(
-                os.path.join(self.path, "_snapshots", name), ignore_errors=True
-            )
-        raise RuntimeError(
-            f"apply on {self.path} lost {self.max_retries} consecutive "
-            f"commit races — raise max_retries or serialize the writers"
-        )
-
-    def merge(self, updates: DataFrame) -> None:
-        """Transactional last-writer-wins merge with OCC retry."""
-
-        def fn(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                # first commit: still LWW-dedup within the batch itself
-                return last_write_wins(updates, self.key_cols, self.order_cols)
-            return merge_upsert(current, updates, self.key_cols, self.order_cols)
-
-        self.apply(fn)
-
-    def write_snapshot(self, df: DataFrame) -> None:
-        """Full-REPLACE commit through the versioned protocol.
-
-        Replace semantics ignore concurrent state by design (the retry
-        re-claims with the same df — last replace wins). For
-        read-modify-write, use :meth:`apply`, never read +
-        ``write_snapshot``.
-        """
-        self.apply(lambda _current: df)
-
-    def vacuum(self, keep: int = 2, grace_seconds: float = 3600.0) -> None:
-        """Drop snapshots (and markers) older than the newest ``keep``
-        committed versions, plus unreferenced staging dirs older than
-        ``grace_seconds``.
-
-        The grace period exists because an unreferenced directory is not
-        necessarily garbage: a concurrent writer stages its snapshot
-        BEFORE claiming a version, so deleting young unreferenced dirs
-        would corrupt that writer's about-to-commit version. Only dirs
-        that have sat unclaimed longer than any plausible stage-to-commit
-        window are reclaimed (crash leftovers).
-        """
-        import time
-
-        if keep < 1:
-            # keep=0 would unlink every commit marker — silently emptying
-            # the store and restarting the version counter. Vacuum is a
-            # retention tool, not a drop-table; refuse.
-            raise ValueError(f"vacuum keep must be >= 1, got {keep}")
-        versions = sorted(
-            int(f) for f in os.listdir(self._commits_dir()) if f.isdigit()
-        )
-        live = versions[-keep:]
-        _occ_retire_epochs(
-            self._commits_dir(), [v for v in versions if v not in live]
-        )
-        referenced = set()
-        for v in versions:
-            d = self._snapshot_dir(v)
-            if v in live and d is not None:
-                referenced.add(os.path.basename(d))
-                continue
-            if d is not None:
-                shutil.rmtree(d, ignore_errors=True)
-            os.unlink(os.path.join(self._commits_dir(), str(v)))
-        snaps = os.path.join(self.path, "_snapshots")
-        now = time.time()
-        for name in os.listdir(snaps):
-            if name in referenced:
-                continue
-            p = os.path.join(snaps, name)
-            try:
-                age = now - os.path.getmtime(p)
-            except OSError:
-                continue
-            if age >= grace_seconds:
-                shutil.rmtree(p, ignore_errors=True)
-
-
-class DeltaMergeStore:
-    """Delta Lake ``MERGE INTO`` upsert store (requires delta-spark).
-
-    Mirrors reference enhanced_kpi_consumer.py:395-434 (``ON CONFLICT DO
-    UPDATE``): matched rows take the update batch's values, unmatched
-    rows insert — the same UPDATE-PRIORITY semantics as
-    :func:`operators.mutations.merge_upsert`, so the three backends are
-    drop-in interchangeable. (Seq-GUARDED maintenance lives a layer up:
-    session_state_foreach_batch pre-resolves with last_write_wins and
-    calls ``write_snapshot``.) Within the update batch itself, the newest
-    row per key on ``order_cols`` is applied. Delta gives the production
-    properties the parquet stores approximate: file-level MERGE (no full
-    rewrite) and its own OCC on the log.
-    """
-
-    def __init__(
-        self, spark: SparkSession, path: str, key_cols: list[str], order_cols: list[str]
-    ):
-        if not HAS_DELTA:
-            raise ImportError(
-                "delta-spark is not installed; use TransactionalParquetStore "
-                "(same interface, same merge semantics) instead"
-            )
-        self.spark = spark
-        self.path = path
-        self.key_cols = key_cols
-        self.order_cols = order_cols
-
-    def read(self) -> DataFrame | None:
-        if not DeltaTable.isDeltaTable(self.spark, self.path):
-            return None
-        return self.spark.read.format("delta").load(self.path)
-
-    def merge(self, updates: DataFrame) -> None:
-        # MERGE requires unique keys on the source side: pre-resolve the
-        # batch to its newest row per key (same as merge_upsert's window)
-        resolved = last_write_wins(updates, self.key_cols, self.order_cols)
-        if self.read() is None:
-            resolved.write.format("delta").save(self.path)
-            return
-        tbl = DeltaTable.forPath(self.spark, self.path)
-        on = " AND ".join(f"t.`{k}` = u.`{k}`" for k in self.key_cols)
-        (
-            tbl.alias("t")
-            .merge(resolved.alias("u"), on)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    def write_snapshot(self, df: DataFrame) -> None:
-        df.write.format("delta").mode("overwrite").save(self.path)
-
-
-def make_upsert_store(
-    spark: SparkSession,
-    path: str,
-    key_cols: list[str],
-    order_cols: list[str],
-    fmt: str = "parquet",
-):
-    """Factory over the upsert backends: ``parquet`` (single-writer
-    snapshot rewrite), ``parquet_txn`` (OCC-versioned parquet),
-    ``parquet_bucketed`` (OCC + partial bucket rewrites — the scale
-    path on plain parquet), ``delta`` (real MERGE; raises ImportError
-    where delta-spark is absent)."""
-    if fmt == "parquet":
-        from iheardai_data_pipeline_spark.streaming.sinks import ParquetUpsertStore
-
-        return ParquetUpsertStore(spark, path, key_cols, order_cols)
-    if fmt == "parquet_txn":
-        return TransactionalParquetStore(spark, path, key_cols, order_cols)
-    if fmt == "parquet_bucketed":
-        return BucketedTransactionalStore(spark, path, key_cols, order_cols)
-    if fmt == "delta":
-        return DeltaMergeStore(spark, path, key_cols, order_cols)
-    raise ValueError(f"unknown store format {fmt!r}")
-
-
-class BucketedTransactionalStore:
-    """OCC upsert store with PARTIAL rewrites: Delta-style file-level
-    MERGE on plain parquet.
-
-    The plain :class:`TransactionalParquetStore` rewrites the whole
-    snapshot per merge — its documented 100 TB limitation. Here the key
-    space hash-partitions into ``n_buckets``; a merge rewrites ONLY the
-    buckets containing updated keys and the commit marker carries a
-    MANIFEST mapping bucket -> snapshot dir, so untouched buckets are
-    inherited by pointer, never copied. A 1-key update into a 10 TB
-    store rewrites ~1/n_buckets of it. Same exclusive-hard-link commit
-    claim and read-snapshot isolation as the full-snapshot store;
-    conflicts resolve by re-read + re-merge at version granularity.
-
-    Layout under ``path``::
-
-        _meta.json                       {"n_buckets": N} — pinned at
-                                         creation; every writer MUST use
-                                         the same bucketing or merges
-                                         would read the wrong buckets
-        _snapshots/<uuid>/__bucket=NN/   parquet for the buckets that
-                                         version rewrote
-        _commits/<N>                     {"manifest": {"NN": "<uuid>", ...}}
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        key_cols: list[str],
-        order_cols: list[str],
-        n_buckets: int | None = None,
-        max_retries: int = 10,
-    ):
-        self.spark = spark
-        self.path = path
-        self.key_cols = key_cols
-        self.order_cols = order_cols
-        self.max_retries = max_retries
-        # Cached parquet file schema of this store's staged files: every
-        # commit writes the same row schema (the merge/fold contract), so
-        # schema inference — a per-`spark.read.parquet` driver cost of
-        # ~100-200ms (footer read + file listing) — needs to run at most
-        # ONCE per store instance; writes prime it for free from the
-        # staged frame (guide §5: keep the driver out of the data path).
-        self._file_schema = None
-        os.makedirs(os.path.join(path, "_snapshots"), exist_ok=True)
-        os.makedirs(os.path.join(path, "_commits"), exist_ok=True)
-        # n_buckets is part of the on-disk layout: a writer opening an
-        # existing store with a different value would hash keys into the
-        # WRONG buckets and silently duplicate them. The first creator
-        # pins it in _meta.json; later opens inherit (n_buckets=None) or
-        # must match.
-        meta_path = os.path.join(path, "_meta.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                persisted = json.load(fh)["n_buckets"]
-            if n_buckets is not None and n_buckets != persisted:
-                raise ValueError(
-                    f"store at {path} was created with n_buckets={persisted}; "
-                    f"got {n_buckets} — pass None to inherit"
-                )
-            self.n_buckets = persisted
-        else:
-            self.n_buckets = 16 if n_buckets is None else n_buckets
-            tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump({"n_buckets": self.n_buckets}, fh)
-            try:
-                os.link(tmp, meta_path)  # exclusive: first creator wins
-            except FileExistsError:
-                with open(meta_path) as fh:
-                    self.n_buckets = json.load(fh)["n_buckets"]
-            finally:
-                os.unlink(tmp)
-
-    # -- commit-log primitives (shared protocol, see _occ_* helpers) ----------
-
-    def _commits_dir(self) -> str:
-        return os.path.join(self.path, "_commits")
-
-    def current_version(self) -> int:
-        return _occ_current_version(self._commits_dir())
-
-    def _manifest(self, version: int) -> dict[str, str] | None:
-        marker = os.path.join(self._commits_dir(), str(version))
-        if version <= 0 or not os.path.exists(marker):
-            return None
-        with open(marker) as fh:
-            return json.load(fh)["manifest"]
-
-    def _try_commit(
-        self, version: int, manifest: dict[str, str], epoch=None
-    ) -> bool:
-        payload: dict = {"manifest": manifest}
-        if epoch is not None:
-            payload["epoch"] = epoch
-        return _occ_try_claim(self._commits_dir(), version, payload)
-
-    def _read_parquet(self, *paths: str) -> DataFrame:
-        """Parquet read with the store's cached file schema (all commits
-        share one row schema — the merge/fold contract — so inference
-        runs at most once per instance; staged writes prime the cache)."""
-        if self._file_schema is None:
-            df = self.spark.read.parquet(*paths)
-            self._file_schema = _nullable_schema(df.schema)
-            return df
-        return self.spark.read.schema(self._file_schema).parquet(*paths)
-
-    # the partition column/dir uses a dunder name so a data column named
-    # "bucket" is never clobbered, and the underscore prefix hides the
-    # dirs from accidental recursive partition discovery
-    def _bucket_path(self, snapshot: str, bucket: str) -> str:
-        return os.path.join(self.path, "_snapshots", snapshot, f"__bucket={bucket}")
-
-    def _written_buckets(self, snapshot: str) -> set[str]:
-        d = os.path.join(self.path, "_snapshots", snapshot)
-        return {
-            e.split("=", 1)[1] for e in os.listdir(d) if e.startswith("__bucket=")
-        }
-
-    def _bucket_expr(self):
-        from pyspark.sql import functions as F
-
-        return F.pmod(F.xxhash64(*self.key_cols), F.lit(self.n_buckets)).cast("int")
-
-    # -- store interface ------------------------------------------------------
-
-    def read(self) -> DataFrame | None:
-        return self.read_version(self.current_version())
-
-    def read_version(self, version: int) -> DataFrame | None:
-        """None for an uncommitted version AND for a committed-empty
-        manifest (zero rows write zero bucket dirs, so there is no
-        parquet schema to surface — callers treat both as 'no rows',
-        and merge()'s first-commit path is semantically identical)."""
-        manifest = self._manifest(version)
-        if not manifest:
-            return None
-        paths = [self._bucket_path(s, b) for b, s in manifest.items()]
-        return self._read_parquet(*paths)
-
-    def read_keys(
-        self, keys: DataFrame, version: int | None = None
-    ) -> DataFrame | None:
-        """Bucket-pruned keyed lookup: scan ONLY the buckets the
-        requested keys hash to, then LEFT SEMI the key set.
-
-        A point lookup in an N-bucket store therefore reads ~1/N of its
-        files — the serving-path read the bucketed layout exists for
-        (the write side already rewrites only touched buckets; this is
-        the symmetric read optimization). The bucket set is a bounded
-        collect (<= n_buckets rows, same bound as apply_keyed); the
-        semi-join's key side is the caller's key set, typically tiny —
-        broadcastable. Returns None when the store is empty or no
-        requested bucket has data (no rows either way).
-        """
-        manifest = self._manifest(
-            self.current_version() if version is None else version
-        )
-        if not manifest:
-            return None
-        kd = keys.select(*self.key_cols).distinct()
-        touched = {
-            str(r["__bucket"])
-            for r in kd.withColumn("__bucket", self._bucket_expr())
-            .select("__bucket")
-            .distinct()
-            .collect()
-        }
-        paths = [
-            self._bucket_path(s, b) for b, s in manifest.items() if b in touched
-        ]
-        if not paths:
-            return None
-        return self._read_parquet(*paths).join(kd, self.key_cols, "left_semi")
-
-    def apply_keyed(self, updates: DataFrame, fn, epoch=None) -> None:
-        """OCC partial-rewrite read-modify-write:
-        ``fn(current_touched_df_or_None, updates) -> merged_touched_df``.
-
-        ``fn`` MUST be key-local — a key's output rows derive only from
-        that key's current + update rows (upserts, per-key aggregate
-        folds). That property is what makes restricting ``current`` to
-        the touched buckets exact; a cross-key fn needs the
-        full-snapshot store's ``apply``. A lost commit race re-reads the
-        new base manifest and re-applies ``fn``, so concurrent commits
-        (including to the same bucket) are never lost.
-
-        ``epoch``: idempotent-commit marker, same contract as
-        :meth:`TransactionalParquetStore.apply`.
-        """
-        upd = updates.withColumn("__bucket", self._bucket_expr())
-        # bounded collect: at most n_buckets rows
-        touched = sorted(
-            str(r["__bucket"]) for r in upd.select("__bucket").distinct().collect()
-        )
-        if not touched:
-            return
-        upd_data = upd.drop("__bucket")
-        for _ in range(self.max_retries):
-            if epoch is not None and epoch in _occ_committed_epochs(
-                self._commits_dir()
-            ):
-                return
-            base_version = self.current_version()
-            base = self._manifest(base_version) or {}
-            cur_paths = [
-                self._bucket_path(s, b) for b, s in base.items() if b in touched
-            ]
-            current = self._read_parquet(*cur_paths) if cur_paths else None
-            merged = fn(current, upd_data)
-            name = uuid.uuid4().hex
-            self._file_schema = _nullable_schema(merged.schema)
-            (
-                merged.withColumn("__bucket", self._bucket_expr())
-                # co-locate each bucket before partitionBy: ONE file per
-                # rewritten bucket per commit instead of (tasks x buckets)
-                # shards — the bucket-sized shuffle is tiny next to
-                # listing/opening hundreds of micro-files on every
-                # subsequent read. Task count is parallelism-capped
-                # (_staged_write_tasks): same files, fewer write tasks.
-                .repartition(
-                    _staged_write_tasks(self.spark, len(touched)), "__bucket"
-                )
-                .write.partitionBy("__bucket")
-                .mode("overwrite")
-                .parquet(os.path.join(self.path, "_snapshots", name))
-            )
-            # manifest entries come from the dirs the write ACTUALLY
-            # produced: a key-local fn may legitimately empty a touched
-            # bucket (deletion fold), and pointing the manifest at a
-            # nonexistent dir would make every subsequent read() throw
-            written = self._written_buckets(name)
-            manifest = dict(base)
-            for b in touched:
-                if b in written:
-                    manifest[b] = name
-                else:
-                    manifest.pop(b, None)
-            if self._try_commit(base_version + 1, manifest, epoch=epoch):
-                return
-            shutil.rmtree(
-                os.path.join(self.path, "_snapshots", name), ignore_errors=True
-            )
-        raise RuntimeError(
-            f"apply_keyed on {self.path} lost {self.max_retries} consecutive commit races"
-        )
-
-    def merge(self, updates: DataFrame) -> None:
-        """Partial-rewrite last-writer-wins merge: stage only the touched
-        buckets, inherit the rest from the base manifest by pointer."""
-
-        def fn(current: DataFrame | None, upd: DataFrame) -> DataFrame:
-            if current is None:
-                return last_write_wins(upd, self.key_cols, self.order_cols)
-            return merge_upsert(current, upd, self.key_cols, self.order_cols)
-
-        self.apply_keyed(updates, fn)
-
-    def write_snapshot(self, df: DataFrame) -> None:
-        """Full replace: every bucket rewritten into one snapshot dir."""
-        for _ in range(self.max_retries):
-            base_version = self.current_version()
-            name = uuid.uuid4().hex
-            self._file_schema = _nullable_schema(df.schema)
-            (
-                df.withColumn("__bucket", self._bucket_expr())
-                # one file per bucket (see apply_keyed)
-                .repartition(
-                    _staged_write_tasks(self.spark, self.n_buckets), "__bucket"
-                )
-                .write.partitionBy("__bucket")
-                .mode("overwrite")
-                .parquet(os.path.join(self.path, "_snapshots", name))
-            )
-            manifest = {b: name for b in self._written_buckets(name)}
-            if self._try_commit(base_version + 1, manifest):
-                return
-            shutil.rmtree(
-                os.path.join(self.path, "_snapshots", name), ignore_errors=True
-            )
-        raise RuntimeError(f"write_snapshot on {self.path} lost every commit race")
-
-    def vacuum(self, keep: int = 2, grace_seconds: float = 3600.0) -> None:
-        """Reclaim snapshot dirs no LIVE manifest references (a dir stays
-        live while ANY retained version's manifest points at one of its
-        buckets — partial rewrites share dirs across versions), plus
-        stale unreferenced staging dirs past the grace period."""
-        import time
-
-        if keep < 1:
-            # see TransactionalParquetStore.vacuum — keep=0 would reset
-            # the store to empty; refuse rather than destroy.
-            raise ValueError(f"vacuum keep must be >= 1, got {keep}")
-        versions = sorted(
-            int(f) for f in os.listdir(self._commits_dir()) if f.isdigit()
-        )
-        live = set(versions[-keep:])
-        _occ_retire_epochs(
-            self._commits_dir(), [v for v in versions if v not in live]
-        )
-        referenced: set[str] = set()
-        for v in versions:
-            manifest = self._manifest(v) or {}
-            if v in live:
-                referenced.update(manifest.values())
-            else:
-                os.unlink(os.path.join(self._commits_dir(), str(v)))
-        snaps = os.path.join(self.path, "_snapshots")
-        now = time.time()
-        for name in os.listdir(snaps):
-            if name in referenced:
-                continue
-            p = os.path.join(snaps, name)
-            try:
-                age = now - os.path.getmtime(p)
-            except OSError:
-                continue
-            if age >= grace_seconds:
-                shutil.rmtree(p, ignore_errors=True)
-
-
 class MultiRelationTransactionalStore:
     """N named bucketed relations under ONE OCC commit log: a commit
     covers every relation ATOMICALLY, staged by a SINGLE Spark write.
 
-    Why it exists: an index that maintains two relations per ingest
-    (e.g. the MinHash band index's band keys + shingle profiles) pays
-    two full commit cycles per batch on two separate stores — two
-    touched-bucket collects, two write jobs, two snapshot listings, two
-    claim links — and a crash between them leaves the relations
-    inconsistent. Here each relation keeps its own key columns and
-    bucket hashing, but one commit stages ALL relations' touched
-    buckets under one snapshot dir (``__rel=<name>/__bucket=<NN>``
-    partition dirs, written by ONE job over the relations' unioned
-    frames) and one exclusive hard link publishes a manifest covering
-    every relation. Halves the per-batch fixed cost and makes the
-    cross-relation state transactional.
+    Each relation keeps its own key columns and bucket hashing; one
+    commit stages ALL relations' touched buckets under one snapshot dir
+    (``__rel=<name>/__bucket=<NN>`` partition dirs, written by ONE job
+    over the relations' unioned frames) and one exclusive hard link
+    publishes a manifest covering every relation. An index that
+    maintains several relations per ingest (e.g. the MinHash band
+    index's band keys + shingle profiles) therefore pays one commit
+    cycle per batch, and a crash can never leave its relations
+    inconsistent. A 1-key update into a 10 TB store rewrites
+    ~1/n_buckets of one relation.
 
     A bucket's manifest entry is a LIST of snapshot dirs (Delta's
     add-file model): :meth:`append_keyed` — the ingest hot path —
@@ -941,7 +354,10 @@ class MultiRelationTransactionalStore:
 
     Layout under ``path``::
 
-        _meta.json                  {"n_buckets": N, "relations": [...]}
+        _meta.json                  {"n_buckets": N, "relations": {rel: keys}}
+                                    — pinned at creation; every writer
+                                    MUST use the same bucketing or
+                                    merges would read the wrong buckets
         _snapshots/<uuid>/__rel=<name>/__bucket=<NN>/  touched buckets
         _commits/<N>                {"manifest": {rel: {"NN": ["<uuid>", ...]}},
                                      "epoch": optional idempotence marker}
@@ -971,47 +387,56 @@ class MultiRelationTransactionalStore:
         self.path = path
         self.relations = dict(relations)
         self.max_retries = max_retries
-        # cached UNION file schema (see BucketedTransactionalStore
-        # _read_parquet): every commit stages the same union schema —
-        # a documented constraint of this store — so per-read footer
-        # inference is pure repeated driver cost; writes prime it
+        # Cached UNION file schema of this store's staged files: every
+        # commit stages the same union schema (a documented constraint
+        # of this store), so schema inference — a per-`spark.read.parquet`
+        # driver cost of ~100-200ms (footer read + file listing) — needs
+        # to run at most ONCE per store instance; writes prime it for
+        # free from the staged frame (guide §5: keep the driver out of
+        # the data path).
         self._file_schema = None
         os.makedirs(os.path.join(path, "_snapshots"), exist_ok=True)
         os.makedirs(os.path.join(path, "_commits"), exist_ok=True)
-        # layout constants pinned by the first creator (see
-        # BucketedTransactionalStore: wrong n_buckets = wrong buckets)
-        meta_path = os.path.join(path, "_meta.json")
+        # n_buckets and the relation keys are part of the on-disk
+        # layout: a writer opening an existing store with different
+        # values would hash keys into the WRONG buckets and silently
+        # duplicate them. The first creator pins them; later opens
+        # inherit n_buckets (None) or must match.
         want = {
             "n_buckets": 16 if n_buckets is None else n_buckets,
             "relations": {r: list(k) for r, k in sorted(relations.items())},
         }
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                persisted = json.load(fh)
-            if persisted["relations"] != want["relations"]:
-                raise ValueError(
-                    f"store at {path} has relations {persisted['relations']}; "
-                    f"got {want['relations']}"
-                )
-            if n_buckets is not None and persisted["n_buckets"] != n_buckets:
-                raise ValueError(
-                    f"store at {path} was created with "
-                    f"n_buckets={persisted['n_buckets']}; got {n_buckets} — "
-                    "pass None to inherit"
-                )
-            self.n_buckets = persisted["n_buckets"]
-        else:
-            self.n_buckets = want["n_buckets"]
-            tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(want, fh)
-            try:
-                os.link(tmp, meta_path)  # exclusive: first creator wins
-            except FileExistsError:
-                with open(meta_path) as fh:
-                    self.n_buckets = json.load(fh)["n_buckets"]
-            finally:
-                os.unlink(tmp)
+        persisted = claim_layout_meta(os.path.join(path, "_meta.json"), want)
+        if "relations" not in persisted:
+            raise ValueError(
+                f"store at {path} has the old single-relation bucketed "
+                "layout (_meta.json without 'relations', commit manifests "
+                "mapping bucket -> one snapshot dir); this build reads "
+                "the multi-relation layout only — rebuild the store "
+                "(re-load its source into a fresh path)"
+            )
+        if persisted["relations"] != want["relations"]:
+            raise ValueError(
+                f"store at {path} has relations {persisted['relations']}; "
+                f"got {want['relations']}"
+            )
+        if n_buckets is not None and persisted["n_buckets"] != n_buckets:
+            raise ValueError(
+                f"store at {path} was created with "
+                f"n_buckets={persisted['n_buckets']}; got {n_buckets} — "
+                "pass None to inherit"
+            )
+        self.n_buckets = persisted["n_buckets"]
+
+    @property
+    def prune_probes(self) -> bool:
+        """Prune-vs-scan rule for keyed probes: the touched-bucket
+        collect of :meth:`read_keys` is a whole Spark job over the probe
+        keys; at rig-small bucket counts lazily listing every bucket dir
+        (:meth:`read`, then the caller's join still filters) is cheaper
+        than running it. Large layouts (buckets_for_corpus sizing) MUST
+        prune — that is what makes probes O(batch)."""
+        return self.n_buckets > 64
 
     # -- commit-log primitives (shared OCC protocol) ---------------------------
 
@@ -1059,10 +484,28 @@ class MultiRelationTransactionalStore:
             payload["epoch"] = epoch
         return _occ_try_claim(self._commits_dir(), version, payload)
 
+    def _snapshot_dir(self, snapshot: str) -> str:
+        return os.path.join(self.path, "_snapshots", snapshot)
+
+    # the partition columns/dirs use dunder names so a data column named
+    # "bucket" is never clobbered, and the underscore prefix hides the
+    # dirs from accidental recursive partition discovery
     def _bucket_path(self, snapshot: str, rel: str, bucket: str) -> str:
         return os.path.join(
-            self.path, "_snapshots", snapshot, f"__rel={rel}", f"__bucket={bucket}"
+            self._snapshot_dir(snapshot), f"__rel={rel}", f"__bucket={bucket}"
         )
+
+    def _paths(
+        self, rel: str, rel_manifest: dict[str, list[str]], buckets=None
+    ) -> list[str]:
+        """Every snapshot dir of ``rel``'s buckets (all, or only those in
+        ``buckets``) — a bucket's rows are its whole dir list."""
+        return [
+            self._bucket_path(s, rel, b)
+            for b, names in rel_manifest.items()
+            if buckets is None or b in buckets
+            for s in names
+        ]
 
     def _read_parquet(self, *paths: str) -> DataFrame:
         """Parquet read with the cached union file schema (all staged
@@ -1090,7 +533,7 @@ class MultiRelationTransactionalStore:
         )
 
     def _written_buckets(self, snapshot: str, rel: str) -> set[str]:
-        d = os.path.join(self.path, "_snapshots", snapshot, f"__rel={rel}")
+        d = os.path.join(self._snapshot_dir(snapshot), f"__rel={rel}")
         if not os.path.isdir(d):
             return set()
         return {
@@ -1098,17 +541,56 @@ class MultiRelationTransactionalStore:
         }
 
     def _bucket_expr(self, rel: str):
-        from pyspark.sql import functions as F
-
         return F.pmod(
             F.xxhash64(*self.relations[rel]), F.lit(self.n_buckets)
         ).cast("int")
+
+    def _tagged(self, rel: str, df: DataFrame) -> DataFrame:
+        return df.withColumn("__rel", F.lit(rel)).withColumn(
+            "__bucket", self._bucket_expr(rel)
+        )
+
+    def _stage(self, parts: list[DataFrame], n_groups: int) -> str:
+        """Write the :meth:`_tagged` frames as ONE uncommitted snapshot
+        dir and return its name. Each (rel, bucket) is co-located before
+        partitionBy: ONE file per rewritten bucket per commit instead of
+        (tasks x buckets) shards — the bucket-sized shuffle is tiny next
+        to listing/opening hundreds of micro-files on every subsequent
+        read. Task count is parallelism-capped (_staged_write_tasks):
+        same files, fewer write tasks."""
+        all_df = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+        )
+        name = uuid.uuid4().hex
+        self._prime_file_schema(all_df)
+        (
+            all_df.repartition(
+                _staged_write_tasks(self.spark, n_groups), "__rel", "__bucket"
+            )
+            .write.partitionBy("__rel", "__bucket")
+            .mode("overwrite")
+            .parquet(self._snapshot_dir(name))
+        )
+        return name
+
+    def _drop_snapshot(self, name: str) -> None:
+        shutil.rmtree(self._snapshot_dir(name), ignore_errors=True)
+
+    def _check_relations(self, frames: dict, op: str) -> None:
+        if set(frames) != set(self.relations):
+            raise ValueError(
+                f"{op} needs updates for every relation "
+                f"{sorted(self.relations)}; got {sorted(frames)}"
+            )
 
     # -- store interface --------------------------------------------------------
 
     def read(self, rel: str, version: int | None = None) -> DataFrame | None:
         """Latest committed rows of one relation, or — with ``version``
-        — the rows AS OF that still-retained committed version.
+        — the rows AS OF that still-retained committed version. None for
+        an uncommitted version AND for a committed-empty relation (zero
+        rows write zero bucket dirs, so there is no parquet schema to
+        surface — callers treat both as 'no rows').
         Multi-read consumers (the postings pruned serve's stats +
         postings + forward sequence) pin ``current_version()`` once and
         pass it to every read so a concurrent commit mid-sequence
@@ -1119,31 +601,26 @@ class MultiRelationTransactionalStore:
         )
         if not manifest or not manifest.get(rel):
             return None
-        paths = [
-            self._bucket_path(s, rel, b)
-            for b, names in manifest[rel].items()
-            for s in names
-        ]
-        return self._read_parquet(*paths)
+        return self._read_parquet(*self._paths(rel, manifest[rel]))
 
     def read_keys(
         self,
         rel: str,
         keys: DataFrame,
-        prune: bool = True,
         broadcast_keys: bool = False,
         version: int | None = None,
     ) -> DataFrame | None:
-        """Bucket-pruned keyed lookup on one relation — identical
-        contract to BucketedTransactionalStore.read_keys.
+        """Bucket-pruned keyed lookup on one relation: scan ONLY the
+        buckets the requested keys hash to, then LEFT SEMI the key set.
 
-        ``prune=False`` skips the touched-bucket collect and lists every
-        bucket dir lazily (the LEFT SEMI still filters the rows — the
-        result is identical). The collect is a full Spark job over the
-        key frame; at small bucket counts scanning all dirs is cheaper
-        than running it, so probe-heavy callers use the rule: prune
-        when ``n_buckets`` is large (the 100 TB layout), scan when it
-        is rig-small (see MinHashBandIndex._prune_probes).
+        A point lookup in an N-bucket store therefore reads ~1/N of its
+        files — the serving-path read the bucketed layout exists for
+        (the write side already rewrites only touched buckets; this is
+        the symmetric read optimization). The bucket set is a bounded
+        collect (<= n_buckets rows, same bound as apply_keyed). Returns
+        None when the store is empty or no requested bucket has data
+        (no rows either way). Probe-heavy callers skip the collect on
+        rig-small layouts with :attr:`prune_probes`.
 
         ``broadcast_keys=True`` hints the semi-join to broadcast the
         key frame — pass it ONLY when the key set is bounded by
@@ -1165,55 +642,46 @@ class MultiRelationTransactionalStore:
         if not manifest or not manifest.get(rel):
             return None
         kd = keys.select(*self.relations[rel]).distinct()
-        if prune:
-            touched = {
-                str(r["__bucket"])
-                for r in kd.withColumn("__bucket", self._bucket_expr(rel))
-                .select("__bucket")
-                .distinct()
-                .collect()
-            }
-            paths = [
-                self._bucket_path(s, rel, b)
-                for b, names in manifest[rel].items()
-                if b in touched
-                for s in names
-            ]
-        else:
-            paths = [
-                self._bucket_path(s, rel, b)
-                for b, names in manifest[rel].items()
-                for s in names
-            ]
+        touched = {
+            str(r["__bucket"])
+            for r in kd.withColumn("__bucket", self._bucket_expr(rel))
+            .select("__bucket")
+            .distinct()
+            .collect()
+        }
+        paths = self._paths(rel, manifest[rel], touched)
         if not paths:
             return None
         if broadcast_keys:
-            from pyspark.sql import functions as F
-
             kd = F.broadcast(kd)
         return self._read_parquet(*paths).join(
             kd, self.relations[rel], "left_semi"
         )
 
     def apply_keyed(self, updates: dict[str, DataFrame], fn, epoch=None) -> None:
-        """Atomic multi-relation OCC read-modify-write.
+        """Atomic multi-relation OCC partial-rewrite read-modify-write.
 
         ``updates`` maps EVERY relation name to its update frame;
-        ``fn(rel, current_touched_or_None, upd) -> merged_touched`` must
-        be key-local per relation (same contract as the single-relation
-        store). One touched-bucket collect, ONE staged write job over
-        all relations, one commit claim. ``epoch`` = idempotent-commit
-        marker (see TransactionalParquetStore.apply).
+        ``fn(rel, current_touched_or_None, upd) -> merged_touched`` MUST
+        be key-local per relation — a key's output rows derive only from
+        that key's current + update rows (upserts, per-key aggregate
+        folds). That property is what makes restricting ``current`` to
+        the touched buckets exact. One touched-bucket collect, ONE
+        staged write job over all relations, one commit claim. A lost
+        commit race re-reads the new base manifest and re-applies
+        ``fn``, so concurrent commits (including to the same bucket)
+        are never lost.
+
+        ``epoch`` makes the commit IDEMPOTENT per epoch (Delta's txn
+        appId/version idea): the epoch is recorded in the commit marker,
+        and a call whose epoch some committed version already carries
+        is a no-op — so a non-idempotent fold (e.g. a CMS sum-merge)
+        replayed by an at-least-once foreachBatch can pass its batch_id
+        and never double-counts. The check re-runs inside the retry
+        loop, so a lost race against a same-epoch twin resolves to
+        exactly one merge.
         """
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
-        if set(updates) != set(self.relations):
-            raise ValueError(
-                f"apply_keyed needs updates for every relation "
-                f"{sorted(self.relations)}; got {sorted(updates)}"
-            )
+        self._check_relations(updates, "apply_keyed")
         upd = {
             rel: df.withColumn("__bucket", self._bucket_expr(rel))
             for rel, df in updates.items()
@@ -1231,47 +699,22 @@ class MultiRelationTransactionalStore:
             return
         upd_data = {rel: df.drop("__bucket") for rel, df in upd.items()}
         for _ in range(self.max_retries):
-            if epoch is not None and epoch in _occ_committed_epochs(
-                self._commits_dir()
-            ):
+            if self.epoch_committed(epoch):
                 return
             base_version = self.current_version()
             base = self._manifest(base_version) or {}
             parts = []
             for rel in sorted(self.relations):
-                rel_base = base.get(rel, {})
-                cur_paths = [
-                    self._bucket_path(s, rel, b)
-                    for b, names in rel_base.items()
-                    if b in touched[rel]
-                    for s in names
-                ]
+                cur_paths = self._paths(rel, base.get(rel, {}), touched[rel])
                 current = (
                     self._read_parquet(*cur_paths) if cur_paths else None
                 )
-                merged = fn(rel, current, upd_data[rel])
-                parts.append(
-                    merged.withColumn("__rel", F.lit(rel)).withColumn(
-                        "__bucket", self._bucket_expr(rel)
-                    )
-                )
-            all_df = reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-            )
-            name = uuid.uuid4().hex
-            self._prime_file_schema(all_df)
-            (
-                # one file per (rel, bucket) per commit — see
-                # BucketedTransactionalStore.apply_keyed
-                all_df.repartition(
-                    _staged_write_tasks(self.spark, n_touched),
-                    "__rel",
-                    "__bucket",
-                )
-                .write.partitionBy("__rel", "__bucket")
-                .mode("overwrite")
-                .parquet(os.path.join(self.path, "_snapshots", name))
-            )
+                parts.append(self._tagged(rel, fn(rel, current, upd_data[rel])))
+            name = self._stage(parts, n_touched)
+            # manifest entries come from the dirs the write ACTUALLY
+            # produced: a key-local fn may legitimately empty a touched
+            # bucket (deletion fold), and pointing the manifest at a
+            # nonexistent dir would make every subsequent read() throw
             manifest = {rel: dict(base.get(rel, {})) for rel in self.relations}
             for rel in self.relations:
                 written = self._written_buckets(name, rel)
@@ -1283,9 +726,9 @@ class MultiRelationTransactionalStore:
                         manifest[rel].pop(b, None)
             if self._try_commit(base_version + 1, manifest, epoch=epoch):
                 return
-            shutil.rmtree(
-                os.path.join(self.path, "_snapshots", name), ignore_errors=True
-            )
+            # lost the race: another writer committed base_version+1
+            # first; drop our stale staging dir, re-read, re-apply
+            self._drop_snapshot(name)
         raise RuntimeError(
             f"apply_keyed on {self.path} lost {self.max_retries} consecutive commit races"
         )
@@ -1311,59 +754,24 @@ class MultiRelationTransactionalStore:
         append duplicates rows (harmless only if the reader's semantics
         tolerate duplicates — the band index's do).
         """
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
-        if set(updates) != set(self.relations):
-            raise ValueError(
-                f"append_keyed needs updates for every relation "
-                f"{sorted(self.relations)}; got {sorted(updates)}"
-            )
-        parts = [
-            updates[rel]
-            .withColumn("__rel", F.lit(rel))
-            .withColumn("__bucket", self._bucket_expr(rel))
-            for rel in sorted(self.relations)
-        ]
-        all_df = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-        )
-        name = uuid.uuid4().hex
-        self._prime_file_schema(all_df)
-        (
-            # one file per (rel, bucket); the staged data is batch-sized,
-            # so the group count is parallelism-capped (see
-            # _staged_write_tasks — same files, fewer write tasks)
-            all_df.repartition(
-                _staged_write_tasks(
-                    self.spark, len(self.relations) * self.n_buckets
-                ),
-                "__rel",
-                "__bucket",
-            )
-            .write.partitionBy("__rel", "__bucket")
-            .mode("overwrite")
-            .parquet(os.path.join(self.path, "_snapshots", name))
+        self._check_relations(updates, "append_keyed")
+        # the staged data is batch-sized, so the group count is
+        # parallelism-capped (see _staged_write_tasks)
+        name = self._stage(
+            [self._tagged(rel, updates[rel]) for rel in sorted(self.relations)],
+            len(self.relations) * self.n_buckets,
         )
         written = {
             rel: self._written_buckets(name, rel) for rel in self.relations
         }
         if not any(written.values()):
-            shutil.rmtree(
-                os.path.join(self.path, "_snapshots", name), ignore_errors=True
-            )
+            self._drop_snapshot(name)
             return None
         # the staged dir is version-independent (pure batch rows), so a
         # lost race only re-points the manifest — nothing is re-staged
         for _ in range(self.max_retries):
-            if epoch is not None and epoch in _occ_committed_epochs(
-                self._commits_dir()
-            ):
-                shutil.rmtree(
-                    os.path.join(self.path, "_snapshots", name),
-                    ignore_errors=True,
-                )
+            if self.epoch_committed(epoch):
+                self._drop_snapshot(name)
                 return None
             base_version = self.current_version()
             base = self._manifest(base_version) or {}
@@ -1373,9 +781,7 @@ class MultiRelationTransactionalStore:
                     manifest[rel][b] = manifest[rel].get(b, []) + [name]
             if self._try_commit(base_version + 1, manifest, epoch=epoch):
                 return base_version + 1
-        shutil.rmtree(
-            os.path.join(self.path, "_snapshots", name), ignore_errors=True
-        )
+        self._drop_snapshot(name)
         raise RuntimeError(
             f"append_keyed on {self.path} lost {self.max_retries} consecutive commit races"
         )
@@ -1408,14 +814,8 @@ class MultiRelationTransactionalStore:
         closure, so a lost race would fold fresh rows against a stale
         snapshot — the caller instead recomputes the closure at the
         new version and calls again."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
         for _ in range(self.max_retries):
-            if epoch is not None and epoch in _occ_committed_epochs(
-                self._commits_dir()
-            ):
+            if self.epoch_committed(epoch):
                 return
             base_version = self.current_version()
             if require_version is not None and base_version != require_version:
@@ -1425,89 +825,41 @@ class MultiRelationTransactionalStore:
                     "snapshot-derived fold state and retry"
                 )
             base = self._manifest(base_version) or {}
-            if not any(base.get(rel) for rel in self.relations):
+            populated = [rel for rel in sorted(self.relations) if base.get(rel)]
+            if not populated:
                 return
-            parts = []
-            touched = {rel: sorted(base.get(rel, {})) for rel in self.relations}
-            for rel in sorted(self.relations):
-                rel_base = base.get(rel, {})
-                if not rel_base:
-                    continue
-                cur_paths = [
-                    self._bucket_path(s, rel, b)
-                    for b, names in rel_base.items()
-                    for s in names
-                ]
-                current = self._read_parquet(*cur_paths)
-                merged = fn(rel, current, None)
-                parts.append(
-                    merged.withColumn("__rel", F.lit(rel)).withColumn(
-                        "__bucket", self._bucket_expr(rel)
-                    )
+            parts = [
+                self._tagged(
+                    rel,
+                    fn(rel, self._read_parquet(*self._paths(rel, base[rel])), None),
                 )
-            all_df = reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-            )
-            n_touched = sum(len(v) for v in touched.values())
-            name = uuid.uuid4().hex
-            self._prime_file_schema(all_df)
-            (
-                all_df.repartition(
-                    _staged_write_tasks(self.spark, max(n_touched, 1)),
-                    "__rel",
-                    "__bucket",
-                )
-                .write.partitionBy("__rel", "__bucket")
-                .mode("overwrite")
-                .parquet(os.path.join(self.path, "_snapshots", name))
-            )
-            manifest = {rel: {} for rel in self.relations}
-            for rel in self.relations:
-                for b in self._written_buckets(name, rel):
-                    manifest[rel][b] = [name]
+                for rel in populated
+            ]
+            name = self._stage(parts, sum(len(base[rel]) for rel in populated))
+            manifest = {
+                rel: {b: [name] for b in self._written_buckets(name, rel)}
+                for rel in self.relations
+            }
             if self._try_commit(base_version + 1, manifest, epoch=epoch):
                 return
-            shutil.rmtree(
-                os.path.join(self.path, "_snapshots", name), ignore_errors=True
-            )
+            self._drop_snapshot(name)
         raise RuntimeError(
             f"compaction on {self.path} lost {self.max_retries} consecutive commit races"
         )
 
     def write_snapshot(self, dfs: dict[str, DataFrame]) -> None:
-        """Full replace of EVERY relation in one atomic commit."""
-        from functools import reduce
+        """Full replace of EVERY relation in one atomic commit.
 
-        from pyspark.sql import functions as F
-
-        if set(dfs) != set(self.relations):
-            raise ValueError(
-                f"write_snapshot needs every relation {sorted(self.relations)}"
-            )
+        Replace semantics ignore concurrent state by design (the retry
+        re-claims with the same frames — last replace wins). For
+        read-modify-write, use :meth:`apply_keyed`, never read +
+        ``write_snapshot``."""
+        self._check_relations(dfs, "write_snapshot")
         for _ in range(self.max_retries):
             base_version = self.current_version()
-            parts = [
-                df.withColumn("__rel", F.lit(rel)).withColumn(
-                    "__bucket", self._bucket_expr(rel)
-                )
-                for rel, df in sorted(dfs.items())
-            ]
-            all_df = reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-            )
-            name = uuid.uuid4().hex
-            self._prime_file_schema(all_df)
-            (
-                all_df.repartition(
-                    _staged_write_tasks(
-                        self.spark, len(self.relations) * self.n_buckets
-                    ),
-                    "__rel",
-                    "__bucket",
-                )
-                .write.partitionBy("__rel", "__bucket")
-                .mode("overwrite")
-                .parquet(os.path.join(self.path, "_snapshots", name))
+            name = self._stage(
+                [self._tagged(rel, df) for rel, df in sorted(dfs.items())],
+                len(self.relations) * self.n_buckets,
             )
             manifest = {
                 rel: {b: [name] for b in self._written_buckets(name, rel)}
@@ -1515,18 +867,32 @@ class MultiRelationTransactionalStore:
             }
             if self._try_commit(base_version + 1, manifest):
                 return
-            shutil.rmtree(
-                os.path.join(self.path, "_snapshots", name), ignore_errors=True
-            )
+            self._drop_snapshot(name)
         raise RuntimeError(f"write_snapshot on {self.path} lost every commit race")
 
     def vacuum(self, keep: int = 2, grace_seconds: float = 3600.0) -> None:
-        """Same retention contract as BucketedTransactionalStore.vacuum;
-        a snapshot dir stays live while ANY retained version's manifest
-        references it from ANY relation."""
+        """Drop commit markers older than the newest ``keep`` versions,
+        then reclaim snapshot dirs no LIVE manifest references (a dir
+        stays live while ANY retained version's manifest points at it
+        from ANY relation — partial rewrites share dirs across
+        versions), plus unreferenced staging dirs older than
+        ``grace_seconds``.
+
+        The grace period exists because an unreferenced directory is not
+        necessarily garbage: a concurrent writer stages its snapshot
+        BEFORE claiming a version, so deleting young unreferenced dirs
+        would corrupt that writer's about-to-commit version. Only dirs
+        that have sat unclaimed longer than any plausible stage-to-commit
+        window are reclaimed (crash leftovers). Pruned markers' epochs
+        are retired into the ``_epochs`` sidecar first, so retention
+        never shrinks the idempotence window.
+        """
         import time
 
         if keep < 1:
+            # keep=0 would unlink every commit marker — silently emptying
+            # the store and restarting the version counter. Vacuum is a
+            # retention tool, not a drop-table; refuse.
             raise ValueError(f"vacuum keep must be >= 1, got {keep}")
         versions = sorted(
             int(f) for f in os.listdir(self._commits_dir()) if f.isdigit()
@@ -1556,3 +922,91 @@ class MultiRelationTransactionalStore:
                 continue
             if age >= grace_seconds:
                 shutil.rmtree(p, ignore_errors=True)
+
+
+class BucketedTransactionalStore:
+    """Single-relation keyed upsert store: a one-relation
+    :class:`MultiRelationTransactionalStore` (relation ``rows``, keyed
+    on ``key_cols``) plus last-writer-wins ``merge`` on ``order_cols``
+    per key — the reference's ``ON CONFLICT DO UPDATE WHERE
+    excluded.seq > current.seq`` shape. Commits, reads, staging, epochs
+    and vacuum are the wrapped store's.
+
+    ``n_buckets`` defaults to 16 and is pinned at creation;
+    ``n_buckets=1`` keeps small folded state (the streaming sketches)
+    as one file per commit.
+    """
+
+    REL = "rows"
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        key_cols: list[str],
+        order_cols: list[str],
+        n_buckets: int | None = None,
+        max_retries: int = 10,
+    ):
+        self.spark = spark
+        self.path = path
+        self.key_cols = list(key_cols)
+        self.order_cols = list(order_cols)
+        self._store = MultiRelationTransactionalStore(
+            spark,
+            path,
+            {self.REL: self.key_cols},
+            n_buckets=n_buckets,
+            max_retries=max_retries,
+        )
+        self.n_buckets = self._store.n_buckets
+
+    def current_version(self) -> int:
+        """Highest committed version, or 0 if the store is empty."""
+        return self._store.current_version()
+
+    def read(self) -> DataFrame | None:
+        """Latest committed rows (snapshot-isolated), or None if empty."""
+        return self._store.read(self.REL)
+
+    def read_version(self, version: int) -> DataFrame | None:
+        """Time travel: any still-vacuum-retained committed version."""
+        return self._store.read(self.REL, version=version)
+
+    def read_keys(
+        self, keys: DataFrame, version: int | None = None
+    ) -> DataFrame | None:
+        """Bucket-pruned keyed lookup (see
+        :meth:`MultiRelationTransactionalStore.read_keys`)."""
+        return self._store.read_keys(self.REL, keys, version=version)
+
+    def apply_keyed(self, updates: DataFrame, fn, epoch=None) -> None:
+        """OCC partial-rewrite read-modify-write:
+        ``fn(current_touched_df_or_None, updates) -> merged_touched_df``,
+        key-local, ``epoch``-idempotent (see
+        :meth:`MultiRelationTransactionalStore.apply_keyed`)."""
+        self._store.apply_keyed(
+            {self.REL: updates}, lambda _rel, cur, upd: fn(cur, upd), epoch=epoch
+        )
+
+    def merge(self, updates: DataFrame) -> None:
+        """Transactional last-writer-wins merge: stage only the touched
+        buckets, inherit the rest from the base manifest by pointer.
+        UPDATE-PRIORITY (merge_upsert): the batch's row replaces a
+        stored match; within the batch the newest on ``order_cols``
+        wins."""
+
+        def fn(current: DataFrame | None, upd: DataFrame) -> DataFrame:
+            if current is None:
+                return last_write_wins(upd, self.key_cols, self.order_cols)
+            return merge_upsert(current, upd, self.key_cols, self.order_cols)
+
+        self.apply_keyed(updates, fn)
+
+    def write_snapshot(self, df: DataFrame) -> None:
+        """Full replace: every bucket rewritten into one snapshot dir."""
+        self._store.write_snapshot({self.REL: df})
+
+    def vacuum(self, keep: int = 2, grace_seconds: float = 3600.0) -> None:
+        """See :meth:`MultiRelationTransactionalStore.vacuum`."""
+        self._store.vacuum(keep, grace_seconds)

@@ -4,24 +4,26 @@ The reference's Snowflake loader (etl/load/snowflake_loader.py:114-136)
 drains Kafka topics and ``write_pandas``-appends each poll batch into a
 per-topic warehouse table (chunked, keyed tables). The Spark
 restatement is a foreachBatch-able loader with the same split the Kafka
-reader uses (``streaming/readers.py:read_kafka_stream``): the
-engine-side semantics — in-batch last-write-wins dedup on the key,
-and, for every ``make_upsert_store`` format, exactly-once via the
-stream checkpoint + idempotent keyed merge — are real and tested.
-The ``snowflake`` format is connector-lazy (resolved at write time;
-this rig has no warehouse) and is a plain ``mode('append')`` save:
-that path is APPEND-ONLY / AT-LEAST-ONCE — a micro-batch replayed
-after a crash between write and checkpoint commit appends its rows
-again, and the in-batch dedup does not make the table-level append
-idempotent. A production deployment wanting exactly-once on Snowflake
-stages each batch into a temp table and issues a keyed server-side
-MERGE (the store formats model exactly that contract locally).
+reader uses (``streaming/readers.py:read_kafka_stream``). Two formats:
+
+- ``parquet`` — the local transactional store
+  (:class:`streaming.stores.BucketedTransactionalStore`): in-batch
+  last-write-wins dedup on the key, then a keyed merge that rewrites
+  only the touched buckets. With the stream checkpoint this is
+  exactly-once; the semantics are real and tested.
+- ``snowflake`` — connector-lazy (resolved at write time; this rig has
+  no warehouse) and a plain ``mode('append')`` save: APPEND-ONLY /
+  AT-LEAST-ONCE — a micro-batch replayed after a crash between write
+  and checkpoint commit appends its rows again, and the in-batch dedup
+  does not make the table-level append idempotent. A production
+  deployment wanting exactly-once on Snowflake stages each batch into a
+  temp table and issues a keyed server-side MERGE (the ``parquet``
+  store models exactly that contract locally).
 
 At scale the loader is shuffle-minimal: the only exchange per batch is
 the key-partitioned window for in-batch dedup (micro-batch sized, not
-table sized); the merge itself is the chosen store's contract
-(bucket-partial rewrites for ``parquet_bucketed``, server-side MERGE
-for a real warehouse connector).
+table sized); the merge itself is the store's bucket-partial rewrite
+(or a server-side MERGE for a real warehouse connector).
 """
 
 from __future__ import annotations
@@ -37,12 +39,13 @@ class WarehouseBatchLoader:
     ``fmt='snowflake'`` targets the spark-snowflake connector
     (``target`` = dbtable, ``connector_options`` = sfURL/sfUser/... as
     documented by the connector) with append-only / at-least-once
-    delivery (see module doc); any :func:`make_upsert_store` format
-    (``parquet``, ``parquet_txn``, ``parquet_bucketed``, ``delta``)
-    makes ``target`` a local path and gives real keyed-upsert,
-    replay-idempotent semantics — the same K2 pattern the coverage doc
-    promised for K6.
+    delivery (see module doc); ``fmt='parquet'`` makes ``target`` a
+    local path of the transactional bucketed store and gives real
+    keyed-upsert, replay-idempotent semantics — the same K2 pattern the
+    coverage doc promised for K6.
     """
+
+    FORMATS = ("parquet", "snowflake")
 
     def __init__(
         self,
@@ -50,9 +53,11 @@ class WarehouseBatchLoader:
         target: str,
         key_cols: list[str],
         order_cols: list[str],
-        fmt: str = "parquet_txn",
+        fmt: str = "parquet",
         connector_options: dict | None = None,
     ) -> None:
+        if fmt not in self.FORMATS:
+            raise ValueError(f"unknown fmt {fmt!r}; expected one of {self.FORMATS}")
         self.spark = spark
         self.target = target
         self.key_cols = list(key_cols)
@@ -97,24 +102,24 @@ class WarehouseBatchLoader:
             return
         if self._store is None:
             from iheardai_data_pipeline_spark.streaming.stores import (
-                make_upsert_store,
+                BucketedTransactionalStore,
             )
 
-            self._store = make_upsert_store(
-                self.spark, self.target, self.key_cols, self.order_cols, self.fmt
+            self._store = BucketedTransactionalStore(
+                self.spark, self.target, self.key_cols, self.order_cols
             )
         self._store.merge(batch)
 
     def read(self) -> DataFrame:
-        """Current stand-in table contents (store formats only)."""
+        """Current stand-in table contents (``fmt='parquet'`` only)."""
         if self._store is None:
             raise RuntimeError("nothing loaded yet (or fmt='snowflake')")
         return self._store.read()
 
     def foreach_batch(self):
         """Adapter for ``writeStream.foreachBatch`` — the streaming K6
-        path, the reference's manual-commit loop restated. Store
-        formats: checkpointed offsets + idempotent keyed merge =
+        path, the reference's manual-commit loop restated.
+        ``fmt='parquet'``: checkpointed offsets + idempotent keyed merge =
         effective exactly-once. ``fmt='snowflake'``: at-least-once
         (append-only; see module doc)."""
 

@@ -91,7 +91,7 @@ def test_topk_reads_only_probed_buckets(spark, tmp_path):
         spark, str(tmp_path / "ann3"), corpus,
         centroids=cents, books=books, n_buckets=256,
     )
-    assert idx._prune_probes
+    assert idx._store.prune_probes
     probe_ids = idx._probe_ids([float(x) for x in _unit(3)], 1)
     for rel in ("codes", "vectors"):
         rows = idx._read_probed(rel, probe_ids)
@@ -198,7 +198,7 @@ def test_topk_batch_probes_buckets_not_whole_store(spark, tmp_path):
         spark, str(tmp_path / "annp"), corpus,
         centroids=cents, books=books, n_buckets=256,
     )
-    assert idx._prune_probes
+    assert idx._store.prune_probes
     queries = spark.createDataFrame(
         [(0, [float(x) for x in _unit(3)])],
         "query_id long, embedding array<float>",
@@ -704,7 +704,7 @@ def test_doc_topk_reads_only_probed_buckets(spark, tmp_path):
         spark, str(tmp_path / "anndp"), corpus,
         centroids=cents, books=books, n_buckets=256,
     )
-    assert idx._prune_probes
+    assert idx._store.prune_probes
     out = idx.doc_topk(
         _unit(3), _labels(corpus), k_docs=2, chunk_k=6, nprobe=1,
         shortlist=10,

@@ -132,7 +132,7 @@ def test_replayed_ingest_returns_same_survivors(spark, tmp_path):
 
 def test_probe_is_bucket_pruned(spark, tmp_path):
     idx = FingerprintIndex(spark, str(tmp_path / "fpp"), n_buckets=256)
-    assert idx._prune_probes
+    assert idx._store.prune_probes
     idx.append(_docs(spark, _corpus_rows()))
     # one suspect fingerprint -> the anti-join's store read must touch
     # only that fingerprint's bucket

@@ -1,26 +1,46 @@
-"""TransactionalParquetStore: OCC commit protocol, snapshot isolation,
-retry-on-conflict, vacuum. The foreachBatch contract itself is covered
-backend-parametrized in test_streaming.py."""
+"""The transactional store: OCC commit protocol, snapshot isolation,
+retry-on-conflict, epoch idempotence, vacuum — through the
+single-relation facade (BucketedTransactionalStore) and the
+multi-relation store it wraps. The foreachBatch contract itself is
+covered in test_streaming.py."""
 
 from __future__ import annotations
 
+import json
+import os
 import threading
 
 import pytest
 from pyspark.sql import functions as F
 
 from iheardai_data_pipeline_spark.streaming.stores import (
-    HAS_DELTA,
     BucketedTransactionalStore,
-    DeltaMergeStore,
-    TransactionalParquetStore,
+    claim_layout_meta,
 )
 
 SCHEMA = "k string, seq int, v string"
 
 
-def _store(spark, tmp_path, name="s"):
-    return TransactionalParquetStore(spark, str(tmp_path / name), ["k"], ["seq"])
+def _store(spark, tmp_path, name="s", n_buckets=1):
+    # one bucket: every commit rewrites the whole table, so a retry that
+    # did not re-read the winner's commit would drop the winner's rows —
+    # the strictest setting for the OCC tests
+    return BucketedTransactionalStore(
+        spark, str(tmp_path / name), ["k"], ["seq"], n_buckets=n_buckets
+    )
+
+
+def _sum_fold(current, upd):
+    """A NON-idempotent key-local fold (sum of seq per key): a replayed
+    commit would double-count, which is what the epoch tests detect."""
+    if current is None:
+        return upd
+    return (
+        current.unionByName(upd)
+        .groupBy("k", "v")
+        .agg(F.sum("seq").alias("seq"))
+        .select("k", "seq", "v")
+    )
 
 
 def test_merge_last_writer_wins_and_versions(spark, tmp_path):
@@ -31,10 +51,10 @@ def test_merge_last_writer_wins_and_versions(spark, tmp_path):
     got = {r["k"]: (r["seq"], r["v"]) for r in st.read().collect()}
     assert got == {"a": (2, "a2"), "b": (1, "b1"), "c": (1, "c1")}
     assert st.current_version() == 2
-    # merge() is UPDATE-PRIORITY (M3 semantics, same as merge_upsert /
-    # ParquetUpsertStore): the updates batch beats the target even on a
-    # lower seq. Seq-GUARDED state maintenance instead goes through
-    # last_write_wins + write_snapshot (session_state_foreach_batch).
+    # merge() is UPDATE-PRIORITY (M3 semantics, same as merge_upsert):
+    # the updates batch beats the target even on a lower seq.
+    # Seq-GUARDED state maintenance instead goes through last_write_wins
+    # in its fold (session_state_foreach_batch).
     st.merge(spark.createDataFrame([("a", 1, "LATEST-BATCH")], SCHEMA))
     assert {r["k"]: r["v"] for r in st.read().collect()}["a"] == "LATEST-BATCH"
 
@@ -47,37 +67,38 @@ def test_first_commit_dedups_within_batch(spark, tmp_path):
 
 
 def test_commit_claim_is_exclusive(spark, tmp_path):
-    st = _store(spark, tmp_path)
-    assert st._try_commit(1, "snap-a")
-    assert not st._try_commit(1, "snap-b")  # version already owned
-    assert st._try_commit(2, "snap-c")
+    st = _store(spark, tmp_path)._store
+    assert st._try_commit(1, {"rows": {"0": ["snap-a"]}})
+    assert not st._try_commit(1, {"rows": {"0": ["snap-b"]}})  # owned
+    assert st._try_commit(2, {"rows": {"0": ["snap-c"]}})
+    assert st._manifest(1) == {"rows": {"0": ["snap-a"]}}  # first claim won
 
 
 def test_lost_race_retries_against_new_base(spark, tmp_path):
     """A writer that loses the commit race must re-merge on the winner's
     data, not overwrite it (the reference's transactional guarantee)."""
-    path = str(tmp_path / "s")
-    a = TransactionalParquetStore(spark, path, ["k"], ["seq"])
-    b = TransactionalParquetStore(spark, path, ["k"], ["seq"])
+    a = _store(spark, tmp_path)
+    b = _store(spark, tmp_path)
     a.merge(spark.createDataFrame([("a", 1, "base")], SCHEMA))
 
-    # interleave: while A is mid-merge (after reading its base, before
-    # committing), B commits — A's first claim must fail and retry
-    real_stage = a._stage_snapshot
+    # interleave: A has staged its merge of the OLD base; before A's
+    # claim, B commits — A's first claim must fail and retry
+    real_claim = a._store._try_commit
     fired = []
 
-    def stage_with_interleaved_writer(df):
-        name = real_stage(df)  # A's snapshot of the OLD base is staged
+    def claim_after_interleaved_writer(version, manifest, epoch=None):
         if not fired:
             fired.append(True)
             b.merge(spark.createDataFrame([("b", 1, "from-b")], SCHEMA))
-        return name
+        return real_claim(version, manifest, epoch=epoch)
 
-    a._stage_snapshot = stage_with_interleaved_writer
+    a._store._try_commit = claim_after_interleaved_writer
     a.merge(spark.createDataFrame([("a", 2, "from-a")], SCHEMA))
     got = {r["k"]: r["v"] for r in a.read().collect()}
     assert got == {"a": "from-a", "b": "from-b"}  # neither write lost
     assert a.current_version() == 3  # base + B's commit + A's retry
+    # the losing attempt's staging dir was dropped, not left behind
+    assert len(os.listdir(os.path.join(a.path, "_snapshots"))) == 3
 
 
 def test_concurrent_writers_no_lost_update(spark, tmp_path):
@@ -87,9 +108,7 @@ def test_concurrent_writers_no_lost_update(spark, tmp_path):
 
     def write(key):
         try:
-            other = TransactionalParquetStore(
-                spark, st.path, ["k"], ["seq"]
-            )
+            other = _store(spark, tmp_path)
             other.merge(spark.createDataFrame([(key, 1, key)], SCHEMA))
         except Exception as e:  # pragma: no cover
             errs.append(e)
@@ -102,6 +121,7 @@ def test_concurrent_writers_no_lost_update(spark, tmp_path):
     assert not errs
     keys = {r["k"] for r in st.read().collect()}
     assert keys == {"seed", "k0", "k1", "k2", "k3"}  # no lost updates
+    assert st.current_version() == 5
 
 
 def test_time_travel_and_vacuum(spark, tmp_path):
@@ -119,76 +139,94 @@ def test_time_travel_and_vacuum(spark, tmp_path):
     assert st.read().collect()[0]["v"] == "v2"  # store untouched by refusal
 
 
-@pytest.mark.skipif(not HAS_DELTA, reason="delta-spark not installed in this rig")
-def test_delta_merge_backend(spark, tmp_path):  # pragma: no cover
-    st = DeltaMergeStore(spark, str(tmp_path / "d"), ["k", "seq"], ["seq"])
-    st.merge(spark.createDataFrame([("a", 1, "a1")], SCHEMA))
-    st.merge(spark.createDataFrame([("a", 2, "a2"), ("b", 1, "b1")], SCHEMA))
-    # update-priority: the newest batch's row replaces the match
-    st.merge(spark.createDataFrame([("a", 2, "a2x")], SCHEMA))
-    got = {(r["k"], r["seq"]): r["v"] for r in st.read().collect()}
-    assert got == {("a", 1): "a1", ("a", 2): "a2x", ("b", 1): "b1"}
-
-
 def test_apply_rereads_and_remerges_on_lost_race(spark, tmp_path):
     """A read-modify-write that loses the commit race must fold the
     winner's commit into its retry — the lost-update scenario a bare
     read + write_snapshot sequence would hit."""
     from iheardai_data_pipeline_spark.operators.mutations import merge_upsert
 
-    path = str(tmp_path / "s")
-    a = TransactionalParquetStore(spark, path, ["k"], ["seq"])
-    b = TransactionalParquetStore(spark, path, ["k"], ["seq"])
+    a = _store(spark, tmp_path)
+    b = _store(spark, tmp_path)
     a.merge(spark.createDataFrame([("seed", 1, "v0")], SCHEMA))
 
-    fired = {"done": False}
+    calls = []
 
-    def fn(current):
-        if not fired["done"]:
-            fired["done"] = True
+    def fn(current, upd):
+        if not calls:
             # concurrent writer commits BETWEEN a's read and a's commit
             b.merge(spark.createDataFrame([("bkey", 1, "bv")], SCHEMA))
-        updates = spark.createDataFrame([("akey", 1, "av")], SCHEMA)
-        if current is None:
-            return updates
-        return merge_upsert(current, updates, ["k"], ["seq"])
+        calls.append(current)
+        return merge_upsert(current, upd, ["k"], ["seq"])
 
-    a.apply(fn)
+    a.apply_keyed(spark.createDataFrame([("akey", 1, "av")], SCHEMA), fn)
     keys = {r["k"] for r in a.read().collect()}
     assert keys == {"seed", "bkey", "akey"}  # b's commit survived a's retry
+    assert len(calls) == 2  # fn re-applied on the new base
 
 
 def test_vacuum_grace_spares_inflight_staging(spark, tmp_path):
     """vacuum must not delete a young unreferenced staging dir — a
     concurrent writer stages BEFORE it claims a version."""
-    import os
-
     st = _store(spark, tmp_path)
     st.merge(spark.createDataFrame([("a", 1, "v1")], SCHEMA))
     # simulate another writer's staged-but-not-yet-committed snapshot
-    inflight = st._stage_snapshot(spark.createDataFrame([("b", 1, "bv")], SCHEMA))
+    inner = st._store
+    inflight = inner._stage(
+        [inner._tagged("rows", spark.createDataFrame([("b", 1, "bv")], SCHEMA))], 1
+    )
     st.vacuum(keep=1)  # default grace: the young dir must survive
     snaps = os.path.join(st.path, "_snapshots")
     assert inflight in os.listdir(snaps)
     st.vacuum(keep=1, grace_seconds=0.0)  # explicit zero grace reclaims it
     assert inflight not in os.listdir(snaps)
+    assert st.read().collect()[0]["v"] == "v1"  # committed data untouched
+
+
+def test_claim_layout_meta_first_creator_wins(tmp_path, monkeypatch):
+    """The layout-pinning claim returns the PERSISTED meta: the
+    caller's own on creation, the winner's on a later open AND on a
+    lost creation race; no tmp file survives either way."""
+    from iheardai_data_pipeline_spark.streaming import stores as st_mod
+
+    p = str(tmp_path / "_meta.json")
+    assert claim_layout_meta(p, {"n": 1}) == {"n": 1}
+    assert claim_layout_meta(p, {"n": 2}) == {"n": 1}
+    # lost race: the file appears between the existence check and the link
+    monkeypatch.setattr(st_mod.os.path, "exists", lambda _p: False)
+    assert claim_layout_meta(p, {"n": 3}) == {"n": 1}
+    monkeypatch.undo()
+    assert os.listdir(tmp_path) == ["_meta.json"]
+
+
+def test_old_single_relation_layout_refuses_to_open(spark, tmp_path):
+    """A store written by the earlier single-relation bucketed layout
+    pins ``{"n_buckets": N}`` without relations; opening it must say so
+    and ask for a rebuild, not fail with a KeyError."""
+    path = tmp_path / "old"
+    (path / "_commits").mkdir(parents=True)
+    (path / "_meta.json").write_text(json.dumps({"n_buckets": 16}))
+    (path / "_commits" / "1").write_text(
+        json.dumps({"manifest": {"3": "0123abcd"}})
+    )
+    with pytest.raises(ValueError, match="old single-relation.*rebuild"):
+        BucketedTransactionalStore(spark, str(path), ["k"], ["seq"])
 
 
 # --- BucketedTransactionalStore: partial rewrites ---------------------------------
 
 
 def _bstore(spark, tmp_path, name="b", n_buckets=8):
-    from iheardai_data_pipeline_spark.streaming.stores import (
-        BucketedTransactionalStore,
-    )
+    return _store(spark, tmp_path, name, n_buckets=n_buckets)
 
-    return BucketedTransactionalStore(
-        spark, str(tmp_path / name), ["k"], ["seq"], n_buckets=n_buckets
-    )
+
+def _bucket_dirs(st, version):
+    """{bucket: [snapshot dir, ...]} of the facade's one relation."""
+    return st._store._manifest(version)["rows"]
 
 
 def test_bucketed_merge_matches_full_store_semantics(spark, tmp_path):
-    full = _store(spark, tmp_path, "full")
+    # one bucket = every merge rewrites the whole table
+    full = _store(spark, tmp_path, "full", n_buckets=1)
     bkt = _bstore(spark, tmp_path)
     batches = [
         [("a", 1, "a1"), ("b", 1, "b1"), ("c", 1, "c1")],
@@ -207,10 +245,10 @@ def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
     bkt = _bstore(spark, tmp_path, n_buckets=8)
     rows = [(f"k{i}", 1, f"v{i}") for i in range(40)]  # spread over buckets
     bkt.merge(spark.createDataFrame(rows, SCHEMA))
-    m1 = bkt._manifest(bkt.current_version())
+    m1 = _bucket_dirs(bkt, bkt.current_version())
     # single-key update: only that key's bucket may change snapshot dirs
     bkt.merge(spark.createDataFrame([("k0", 2, "v0x")], SCHEMA))
-    m2 = bkt._manifest(bkt.current_version())
+    m2 = _bucket_dirs(bkt, bkt.current_version())
     changed = {b for b in m2 if m1.get(b) != m2[b]}
     assert len(changed) == 1  # exactly the touched bucket
     untouched = set(m1) - changed
@@ -221,10 +259,6 @@ def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
 
 
 def test_bucketed_concurrent_writers_no_lost_update(spark, tmp_path):
-    from iheardai_data_pipeline_spark.streaming.stores import (
-        BucketedTransactionalStore,
-    )
-
     path = str(tmp_path / "bc")
     a = BucketedTransactionalStore(spark, path, ["k"], ["seq"], n_buckets=4)
     a.merge(spark.createDataFrame([("seed", 1, "s")], SCHEMA))
@@ -248,11 +282,9 @@ def test_bucketed_concurrent_writers_no_lost_update(spark, tmp_path):
 
 
 def test_bucketed_vacuum_keeps_shared_dirs(spark, tmp_path):
-    import os
-
     bkt = _bstore(spark, tmp_path, n_buckets=8)
     bkt.merge(spark.createDataFrame([(f"k{i}", 1, f"v{i}") for i in range(40)], SCHEMA))
-    first_name = set(bkt._manifest(1).values()).pop()
+    (first_name,) = {s for names in _bucket_dirs(bkt, 1).values() for s in names}
     bkt.merge(spark.createDataFrame([("k0", 2, "x")], SCHEMA))  # partial rewrite v2
     bkt.vacuum(keep=1, grace_seconds=0.0)
     # v2's manifest still points most buckets at v1's dir: it must survive
@@ -265,10 +297,6 @@ def test_bucketed_vacuum_keeps_shared_dirs(spark, tmp_path):
 
 
 def test_bucketed_n_buckets_pinned_in_meta(spark, tmp_path):
-    from iheardai_data_pipeline_spark.streaming.stores import (
-        BucketedTransactionalStore,
-    )
-
     path = str(tmp_path / "meta")
     a = BucketedTransactionalStore(spark, path, ["k"], ["seq"], n_buckets=8)
     a.merge(spark.createDataFrame([("x", 1, "v")], SCHEMA))
@@ -281,10 +309,6 @@ def test_bucketed_n_buckets_pinned_in_meta(spark, tmp_path):
 
 
 def test_bucketed_preserves_user_bucket_column(spark, tmp_path):
-    from iheardai_data_pipeline_spark.streaming.stores import (
-        BucketedTransactionalStore,
-    )
-
     st = BucketedTransactionalStore(
         spark, str(tmp_path / "ub"), ["k"], ["seq"], n_buckets=4
     )
@@ -298,10 +322,6 @@ def test_bucketed_preserves_user_bucket_column(spark, tmp_path):
 
 
 def test_bucketed_deletion_fold_empties_bucket_cleanly(spark, tmp_path):
-    from iheardai_data_pipeline_spark.streaming.stores import (
-        BucketedTransactionalStore,
-    )
-
     st = BucketedTransactionalStore(
         spark, str(tmp_path / "del"), ["k"], ["seq"], n_buckets=4
     )
@@ -317,12 +337,12 @@ def test_bucketed_deletion_fold_empties_bucket_cleanly(spark, tmp_path):
 
 
 def test_warehouse_loader_stand_in_upsert(spark, tmp_path):
-    """K6 loader against the parquet_txn stand-in: in-batch LWW dedup,
-    cross-batch keyed merge."""
+    """K6 loader against the parquet (transactional store) stand-in:
+    in-batch LWW dedup, cross-batch keyed merge."""
     from iheardai_data_pipeline_spark.streaming.warehouse import WarehouseBatchLoader
 
     ld = WarehouseBatchLoader(
-        spark, str(tmp_path / "wh"), ["k"], ["seq"], fmt="parquet_txn"
+        spark, str(tmp_path / "wh"), ["k"], ["seq"], fmt="parquet"
     )
     # batch 1 carries two versions of key 'a' -> seq 2 wins in-batch
     ld.load_batch(spark.createDataFrame([("a", 1, "v1"), ("a", 2, "v2")], SCHEMA))
@@ -332,6 +352,9 @@ def test_warehouse_loader_stand_in_upsert(spark, tmp_path):
     ld.load_batch(spark.createDataFrame([("a", 3, "v3"), ("b", 1, "b1")], SCHEMA))
     got = {r["k"]: (r["seq"], r["v"]) for r in ld.read().collect()}
     assert got == {"a": (3, "v3"), "b": (1, "b1")}
+    # the store formats are one: the removed backend names are refused
+    with pytest.raises(ValueError, match="parquet_txn"):
+        WarehouseBatchLoader(spark, str(tmp_path / "wh2"), ["k"], ["seq"], fmt="parquet_txn")
 
 
 def test_warehouse_loader_snowflake_is_connector_lazy(spark, tmp_path):
@@ -386,51 +409,25 @@ def test_bucketed_read_keys_multi_and_missing(spark, tmp_path):
 def test_apply_epoch_is_idempotent(spark, tmp_path):
     """A non-idempotent fold (sum-merge) replayed with the same epoch
     must be a no-op — the Delta txn-appId idea on the OCC marker."""
-    st = TransactionalParquetStore(
-        spark, str(tmp_path / "epoch"), key_cols=["k"], order_cols=["seq"]
-    )
+    st = _store(spark, tmp_path, "epoch")
     upd = spark.createDataFrame([("a", 1, "x")], SCHEMA)
 
-    def fn(current):
-        if current is None:
-            return upd
-        return (
-            current.unionByName(upd)
-            .groupBy("k", "v")
-            .agg(F.sum("seq").alias("seq"))
-            .select("k", "seq", "v")
-        )
-
-    st.apply(fn, epoch=7)
-    st.apply(fn, epoch=7)  # replay: skipped
+    st.apply_keyed(upd, _sum_fold, epoch=7)
+    st.apply_keyed(upd, _sum_fold, epoch=7)  # replay: skipped
     assert st.read().collect()[0]["seq"] == 1
-    st.apply(fn, epoch=8)  # new epoch: merges
+    st.apply_keyed(upd, _sum_fold, epoch=8)  # new epoch: merges
     assert st.read().collect()[0]["seq"] == 2
     assert st.current_version() == 2
 
 
 def test_bucketed_apply_keyed_epoch_is_idempotent(spark, tmp_path):
-    st = BucketedTransactionalStore(
-        spark, str(tmp_path / "bepoch"), key_cols=["k"], order_cols=["seq"],
-        n_buckets=4,
-    )
+    st = _store(spark, tmp_path, "bepoch", n_buckets=4)
     upd = spark.createDataFrame([("a", 1, "x"), ("b", 2, "y")], SCHEMA)
-
-    def fn(current, u):
-        if current is None:
-            return u
-        return (
-            current.unionByName(u)
-            .groupBy("k", "v")
-            .agg(F.sum("seq").alias("seq"))
-            .select("k", "seq", "v")
-        )
-
-    st.apply_keyed(upd, fn, epoch="b0")
-    st.apply_keyed(upd, fn, epoch="b0")  # replay: skipped
+    st.apply_keyed(upd, _sum_fold, epoch="b0")
+    st.apply_keyed(upd, _sum_fold, epoch="b0")  # replay: skipped
     got = {r["k"]: r["seq"] for r in st.read().collect()}
     assert got == {"a": 1, "b": 2}
-    st.apply_keyed(upd, fn, epoch="b1")
+    st.apply_keyed(upd, _sum_fold, epoch="b1")
     got = {r["k"]: r["seq"] for r in st.read().collect()}
     assert got == {"a": 2, "b": 4}
 
@@ -729,32 +726,20 @@ def test_vacuum_preserves_epoch_idempotence(spark, tmp_path):
     still no-op: vacuum retires pruned markers' epochs into the durable
     _epochs/ sidecar, so retention never shrinks the idempotence window
     (a sum-fold like t15/t17 would double-count otherwise)."""
-    st = TransactionalParquetStore(
-        spark, str(tmp_path / "vep"), key_cols=["k"], order_cols=["seq"]
-    )
+    st = _store(spark, tmp_path, "vep")
     upd = spark.createDataFrame([("a", 1, "x")], SCHEMA)
 
-    def fn(current):
-        if current is None:
-            return upd
-        return (
-            current.unionByName(upd)
-            .groupBy("k", "v")
-            .agg(F.sum("seq").alias("seq"))
-            .select("k", "seq", "v")
-        )
-
     for ep in (1, 2, 3, 4):
-        st.apply(fn, epoch=ep)
+        st.apply_keyed(upd, _sum_fold, epoch=ep)
     assert st.read().collect()[0]["seq"] == 4
     st.vacuum(keep=1, grace_seconds=0.0)  # prunes markers for epochs 1-3
-    st.apply(fn, epoch=1)  # replay of a pruned epoch: must still skip
+    st.apply_keyed(upd, _sum_fold, epoch=1)  # replay of a pruned epoch: must still skip
     assert st.read().collect()[0]["seq"] == 4
-    st.apply(fn, epoch=5)  # a genuinely new epoch still merges
+    st.apply_keyed(upd, _sum_fold, epoch=5)  # a genuinely new epoch still merges
     assert st.read().collect()[0]["seq"] == 5
     # retire survives a second vacuum (epochs re-fold transitively)
     st.vacuum(keep=1, grace_seconds=0.0)
-    st.apply(fn, epoch=2)
+    st.apply_keyed(upd, _sum_fold, epoch=2)
     assert st.read().collect()[0]["seq"] == 5
 
 
@@ -785,31 +770,19 @@ def test_retired_epochs_fold_to_one_record_and_survive_cold_cache(
 
     from iheardai_data_pipeline_spark.streaming import stores as st_mod
 
-    st = TransactionalParquetStore(
-        spark, str(tmp_path / "fold"), key_cols=["k"], order_cols=["seq"]
-    )
+    st = _store(spark, tmp_path, "fold")
     upd = spark.createDataFrame([("a", 1, "x")], SCHEMA)
 
-    def fn(current):
-        if current is None:
-            return upd
-        return (
-            current.unionByName(upd)
-            .groupBy("k", "v")
-            .agg(F.sum("seq").alias("seq"))
-            .select("k", "seq", "v")
-        )
-
     for ep in range(1, 7):
-        st.apply(fn, epoch=ep)
+        st.apply_keyed(upd, _sum_fold, epoch=ep)
     st.vacuum(keep=1, grace_seconds=0.0)  # retires epochs 1-5 together
-    epochs_dir = _os.path.join(st._commits_dir(), "_epochs")
+    epochs_dir = _os.path.join(st._store._commits_dir(), "_epochs")
     records = [f for f in _os.listdir(epochs_dir) if not f.startswith(".")]
     assert len(records) == 1  # folded, not one file per epoch
     # simulate a fresh process: drop the in-process cache entirely
     st_mod._RETIRED_EPOCH_CACHE.clear()
     for ep in range(1, 6):
-        st.apply(fn, epoch=ep)  # every retired epoch must still no-op
+        st.apply_keyed(upd, _sum_fold, epoch=ep)  # every retired epoch must still no-op
     assert st.read().collect()[0]["seq"] == 6
 
 
@@ -824,31 +797,19 @@ def test_retired_epochs_read_without_generation_marker(
     'always correct, just slower', and that claim must be true)."""
     from iheardai_data_pipeline_spark.streaming import stores as st_mod
 
-    st = TransactionalParquetStore(
-        spark, str(tmp_path / "nogen"), key_cols=["k"], order_cols=["seq"]
-    )
+    st = _store(spark, tmp_path, "nogen")
     upd = spark.createDataFrame([("a", 1, "x")], SCHEMA)
 
-    def fn(current):
-        if current is None:
-            return upd
-        return (
-            current.unionByName(upd)
-            .groupBy("k", "v")
-            .agg(F.sum("seq").alias("seq"))
-            .select("k", "seq", "v")
-        )
-
     for ep in (1, 2, 3, 4):
-        st.apply(fn, epoch=ep)
+        st.apply_keyed(upd, _sum_fold, epoch=ep)
     st.vacuum(keep=1, grace_seconds=0.0)  # retires epochs 1-3
     # simulate generation unavailability AND a cold process
     monkeypatch.setattr(st_mod, "_epochs_generation", lambda d: None)
     st_mod._RETIRED_EPOCH_CACHE.clear()
     for ep in (1, 2, 3):
-        st.apply(fn, epoch=ep)  # retired epochs must STILL no-op
+        st.apply_keyed(upd, _sum_fold, epoch=ep)  # retired epochs must STILL no-op
     assert st.read().collect()[0]["seq"] == 4
-    st.apply(fn, epoch=5)  # a genuinely new epoch still merges
+    st.apply_keyed(upd, _sum_fold, epoch=5)  # a genuinely new epoch still merges
     assert st.read().collect()[0]["seq"] == 5
 
 
@@ -861,31 +822,17 @@ def test_recreated_store_does_not_inherit_retired_epochs(spark, tmp_path):
     import shutil
 
     path = str(tmp_path / "reborn")
-    st = TransactionalParquetStore(
-        spark, path, key_cols=["k"], order_cols=["seq"]
-    )
+    st = BucketedTransactionalStore(spark, path, ["k"], ["seq"], n_buckets=1)
     upd = spark.createDataFrame([("a", 1, "x")], SCHEMA)
 
-    def fn(current):
-        if current is None:
-            return upd
-        return (
-            current.unionByName(upd)
-            .groupBy("k", "v")
-            .agg(F.sum("seq").alias("seq"))
-            .select("k", "seq", "v")
-        )
-
     for ep in (1, 2, 3):
-        st.apply(fn, epoch=ep)
+        st.apply_keyed(upd, _sum_fold, epoch=ep)
     st.vacuum(keep=1, grace_seconds=0.0)  # retires epochs 1-2
-    st.apply(fn, epoch=1)  # no-op; warms the per-process retired cache
+    st.apply_keyed(upd, _sum_fold, epoch=1)  # no-op; warms the per-process retired cache
     assert st.read().collect()[0]["seq"] == 3
     shutil.rmtree(path)
-    st2 = TransactionalParquetStore(
-        spark, path, key_cols=["k"], order_cols=["seq"]
-    )
-    st2.apply(fn, epoch=1)  # fresh history: must COMMIT, not skip
+    st2 = BucketedTransactionalStore(spark, path, ["k"], ["seq"], n_buckets=1)
+    st2.apply_keyed(upd, _sum_fold, epoch=1)  # fresh history: must COMMIT, not skip
     assert st2.read().collect()[0]["seq"] == 1
 
 
@@ -926,8 +873,8 @@ def test_epochs_cache_key_survives_inode_recycling(tmp_path, monkeypatch):
 def test_concurrent_streams_interleave_appends_exact_union(spark, tmp_path):
     """STREAM-level concurrent-writer proof (unit-level OCC races are
     covered above): two availableNow streaming queries run
-    CONCURRENTLY, each foreachBatch apply()-appending its own disjoint
-    batches to ONE TransactionalParquetStore. A deliberate sleep
+    CONCURRENTLY, each foreachBatch apply_keyed()-appending its own
+    disjoint batches to ONE single-bucket store. A deliberate sleep
     between each apply's read and its commit widens the lost-update
     window, so commits genuinely interleave and losers re-merge
     through the retry loop. The final state must be the EXACT union of
@@ -938,9 +885,7 @@ def test_concurrent_streams_interleave_appends_exact_union(spark, tmp_path):
     import os as _os
     import time as _time
 
-    store = TransactionalParquetStore(
-        spark, str(tmp_path / "ccw"), key_cols=["k"], order_cols=["seq"]
-    )
+    store = _store(spark, tmp_path, "ccw")
     srcs = []
     all_rows: list[tuple] = []
     for w in (1, 2):
@@ -960,16 +905,12 @@ def test_concurrent_streams_interleave_appends_exact_union(spark, tmp_path):
         def sink(batch, batch_id):
             rows = batch.localCheckpoint(eager=True)
 
-            def fn(current):
-                merged = (
-                    rows
-                    if current is None
-                    else current.unionByName(rows)
-                )
+            def fn(current, upd):
+                merged = upd if current is None else current.unionByName(upd)
                 _time.sleep(0.05)  # widen the read->commit race window
                 return merged
 
-            store.apply(fn, epoch=f"w{w}-{batch_id}")
+            store.apply_keyed(rows, fn, epoch=f"w{w}-{batch_id}")
 
         return sink
 
@@ -993,7 +934,7 @@ def test_concurrent_streams_interleave_appends_exact_union(spark, tmp_path):
     got = sorted(tuple(r) for r in store.read().collect())
     assert got == sorted(all_rows)
     # every epoch committed exactly once, 8 commits total
-    commits_dir = store._commits_dir()
+    commits_dir = store._store._commits_dir()
     epochs = []
     for f in _os.listdir(commits_dir):
         if f.isdigit():

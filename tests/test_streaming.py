@@ -10,22 +10,15 @@ from pyspark.sql import functions as F
 from iheardai_data_pipeline_spark.sources.batch import load_table
 from iheardai_data_pipeline_spark.streaming.readers import read_events_stream
 from iheardai_data_pipeline_spark.streaming.sinks import (
-    ParquetUpsertStore,
     archive_sink,
     session_kpis_foreach_batch,
     session_state_foreach_batch,
 )
-from iheardai_data_pipeline_spark.streaming.stores import (
-    HAS_DELTA,
-    TransactionalParquetStore,
-    make_upsert_store,
-)
+from iheardai_data_pipeline_spark.streaming.stores import BucketedTransactionalStore
 from iheardai_data_pipeline_spark.streaming.windows import dedup_within_watermark
 
-# every upsert backend must satisfy the same foreachBatch contract
-STORE_BACKENDS = ["parquet", "parquet_txn", "parquet_bucketed"] + (
-    ["delta"] if HAS_DELTA else []
-)
+# the one upsert backend (WarehouseBatchLoader's fmt name for it)
+STORE_BACKENDS = ["parquet"]
 
 
 def test_t5_watermark_dedup(spark, sf_dir, tmp_path):
@@ -66,13 +59,12 @@ def test_t7_archive_sink_partitioning(spark, sf_dir, tmp_path):
 
 @pytest.mark.parametrize("fmt", STORE_BACKENDS)
 def test_foreachbatch_session_kpis_incremental(spark, sf_dir, tmp_path, fmt):
-    """Two micro-batches merged == one-shot batch aggregate (§3.2),
-    identical across every upsert-store backend."""
+    """Two micro-batches merged == one-shot batch aggregate (§3.2)."""
     events = load_table(spark, sf_dir, "events")
     b1 = events.filter(F.col("event_id") % 2 == 0)
     b2 = events.filter(F.col("event_id") % 2 == 1)
-    store = make_upsert_store(
-        spark, str(tmp_path / "kpis"), ["user_id"], ["ended_at_s"], fmt=fmt
+    store = BucketedTransactionalStore(
+        spark, str(tmp_path / "kpis"), ["user_id"], ["ended_at_s"]
     )
     fb = session_kpis_foreach_batch(store)
     fb(b1, 0)
@@ -90,8 +82,8 @@ def test_foreachbatch_session_kpis_incremental(spark, sf_dir, tmp_path, fmt):
 @pytest.mark.parametrize("fmt", STORE_BACKENDS)
 def test_foreachbatch_session_state_seq_guard(spark, tmp_path, fmt):
     """Stale updates (lower seq) never overwrite newer state (J4/W3)."""
-    store = make_upsert_store(
-        spark, str(tmp_path / "state"), ["session_id"], ["seq"], fmt=fmt
+    store = BucketedTransactionalStore(
+        spark, str(tmp_path / "state"), ["session_id"], ["seq"]
     )
     fb = session_state_foreach_batch(store)
     b1 = spark.createDataFrame(
